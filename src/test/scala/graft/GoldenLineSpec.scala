@@ -18,29 +18,7 @@ class GoldenLineSpec extends AnyFunSuite {
 
   val mapbits = 48
 
-  /** deterministic polylines around a city area + some long lines */
-  lazy val corpus: Seq[(Seq[(Double, Double)], Long)] = {
-    val r = new scala.util.Random(777)
-    def r6(v: Double): Double = f"$v%.6f".toDouble
-    val short = (0 until 1500).map { _ =>
-      val lat = 40.6 + r.nextDouble() * 0.2
-      val lon = -74.1 + r.nextDouble() * 0.2
-      val n = 2 + r.nextInt(4)
-      val pts = (0 until n).map { _ =>
-        (r6(lat + (r.nextDouble() - .5) * 0.02), r6(lon + (r.nextDouble() - .5) * 0.02))
-      }
-      (pts, r.nextInt(256).toLong)
-    }
-    val long = (0 until 100).map { _ =>
-      val lat = r.nextDouble() * 120 - 60
-      val lon = r.nextDouble() * 300 - 150
-      val pts = Seq(
-        (r6(lat), r6(lon)),
-        (r6(lat + (r.nextDouble() - .5) * 8), r6(lon + (r.nextDouble() - .5) * 8)))
-      (pts, r.nextInt(256).toLong)
-    }
-    short ++ long
-  }
+  lazy val corpus: Seq[(Seq[(Double, Double)], Long)] = GoldenLineSpec.corpus
 
   lazy val refDir: String = {
     val txt = corpus.map { case (pts, m) =>
@@ -57,15 +35,7 @@ class GoldenLineSpec extends AnyFunSuite {
 
   lazy val featuresDs = {
     import spark.implicits._
-    val feats = corpus
-      .filter(_._1.forall { case (la, lo) => Mercator.valid(la, lo) })
-      .map { case (pts, m) =>
-        val cells = pts.map { case (la, lo) =>
-          Cell.truncate(Cell.encode(Mercator.lonToX32(lo).toInt, Mercator.latToY32(la).toInt), mapbits)
-        }.toArray
-        Feature(cells(0), cells, m)
-      }
-    spark.createDataset(feats)
+    spark.createDataset(GoldenLineSpec.features(mapbits))
   }
 
   def compareTile(z: Int, x: Int, y: Int, flags: Seq[String] = Nil,
@@ -170,4 +140,41 @@ class GoldenLineSpec extends AnyFunSuite {
     assert(refRows == ourRows)
     assert(refRows.nonEmpty)
   }
+}
+
+object GoldenLineSpec {
+  /** deterministic polylines around a city area + some long lines */
+  lazy val corpus: Seq[(Seq[(Double, Double)], Long)] = {
+    val r = new scala.util.Random(777)
+    def r6(v: Double): Double = f"$v%.6f".toDouble
+    val short = (0 until 1500).map { _ =>
+      val lat = 40.6 + r.nextDouble() * 0.2
+      val lon = -74.1 + r.nextDouble() * 0.2
+      val n = 2 + r.nextInt(4)
+      val pts = (0 until n).map { _ =>
+        (r6(lat + (r.nextDouble() - .5) * 0.02), r6(lon + (r.nextDouble() - .5) * 0.02))
+      }
+      (pts, r.nextInt(256).toLong)
+    }
+    val long = (0 until 100).map { _ =>
+      val lat = r.nextDouble() * 120 - 60
+      val lon = r.nextDouble() * 300 - 150
+      val pts = Seq(
+        (r6(lat), r6(lon)),
+        (r6(lat + (r.nextDouble() - .5) * 8), r6(lon + (r.nextDouble() - .5) * 8)))
+      (pts, r.nextInt(256).toLong)
+    }
+    short ++ long
+  }
+
+  /** The corpus as cell-encoded features (records with an invalid vertex
+    * drop whole, like the reference encode). */
+  def features(mapbits: Int): Seq[Feature] = corpus
+    .filter(_._1.forall { case (la, lo) => Mercator.valid(la, lo) })
+    .map { case (pts, m) =>
+      val cells = pts.map { case (la, lo) =>
+        Cell.truncate(Cell.encode(Mercator.lonToX32(lo).toInt, Mercator.latToY32(la).toInt), mapbits)
+      }.toArray
+      Feature(cells(0), cells, m)
+    }
 }
