@@ -181,7 +181,7 @@ object Cli {
   }
 
   /** Whole-tileset build: points + polylines, every zoom in [min..max],
-    * ONE shuffle (renderPyramidAll) -> z/x/y.png + metadata.json. */
+    * ONE shuffle (multi-zoom renderTiles) -> z/x/y.png + metadata.json. */
   private def tileset(args: List[String]): Unit = {
     val (opts, flags, pos, multi) = parse(args, RenderParamArgs + 'o' + 'z')
     val out = opts.getOrElse('o', sys.error("tileset: -o output required"))
@@ -196,7 +196,7 @@ object Cli {
         feats.filter((f: Feature) => f.vertices.length == 1)
           .map(f => (f.cell, f.meta)).toDF("cell", "meta"))
       val lines = feats.filter((f: Feature) => f.vertices.length > 1)
-      val tiles = render_.renderPyramidAll(Some(points), Some(lines), zooms, mapbits, p)
+      val tiles = render_.renderTiles(Some(points), Some(lines), zooms, mapbits, p)
       Sinks.writeTileset(tiles, out, pos.head)
       points.unpersist()
     }
@@ -431,8 +431,8 @@ object Cli {
               Some(lines), z, mapbits, p, requireOwn = false)
           else render_.renderTiles(
             Some(if (p.circle > 0) points else ringFiltered(z, x, y)),
-            Some(lines), z, mapbits, p,
-            requireOwn = false, only = Some((tx, ty) => tx == x && ty == y))
+            Some(lines), Seq(z), mapbits, p,
+            requireOwn = false, only = Some(_ == Cell.tileKey(z, x, y)))
         val tile = tiles.collect().find(t => t.x == x && t.y == y)
         tile match {
           case Some(t) =>

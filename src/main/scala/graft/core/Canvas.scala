@@ -108,8 +108,6 @@ final class Canvas(val width: Int, val height: Int) extends Serializable {
     this
   }
 
-  def nonZeroPixels: Int = image.count(_ != 0.0)
-
   /** Extract a sub-window as a fresh canvas (the leaflet-retina path
     * renders the parent tile at double size and crops each quadrant). */
   def crop(x0: Int, y0: Int, w: Int, h: Int): Canvas = {

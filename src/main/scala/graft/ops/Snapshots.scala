@@ -238,9 +238,8 @@ object CheckpointedTiles {
         // output: only tiles whose level-L ancestor is this bucket
         val shift = z - L
         val tiles = graft.render.Render
-          .renderTiles(Some(pts), None, z, mapbits, params,
-            requireOwn = true,
-            only = Some((tx, ty) => (tx >> shift) == bx && (ty >> shift) == by))
+          .renderTiles(Some(pts), None, Seq(z), mapbits, params,
+            only = Some(k => (Cell.tileKeyX(k) >> shift) == bx && (Cell.tileKeyY(k) >> shift) == by))
           .cache()
         val nTiles = tiles.count()
         tiles.toDF().write.mode("overwrite").parquet(s"$out/bucket=$b")

@@ -25,14 +25,19 @@ case class FeatCmd(tkey: Long, slot: Long, vertices: Array[Long], meta: Long, ow
  * Tile rasterization — the reference's `render` pipeline
  * (render.c:932-1003 + process :74-368) as one Spark job:
  *
- *   features -> [rank filter (step sampling)] -> flatMap to the tiles
- *   each feature is drawn into (own tile, spill ring, line pyramid) ->
- *   groupByKey(tile) -> canvas accumulation -> tone map -> PNG.
+ *   features -> flatMap to the tiles each feature is drawn into at
+ *   every requested zoom (own tile, spill ring, line pyramid; step
+ *   sampling by rank) -> groupByKey(tile) -> canvas accumulation ->
+ *   tone map -> PNG.
  *
- * One shuffle; tiles are independent (the reference's xargs -P8 becomes
- * the shuffle partitioning). Dense-city tiles are the skew risk: the
- * canvas is an associative monoid (Canvas.merge), so skewed tiles can be
- * salted into sub-groups and merged; AQE handles moderate skew.
+ * One command emitter (`commands`) feeds every entry point: the multi-
+ * zoom `renderTiles` (and `renderPyramid`, its points-only form), the
+ * retina, vector-tile, raster-dump and salted variants differ only in
+ * the per-tile finisher. One shuffle; tiles are independent (the
+ * reference's xargs -P8 becomes the shuffle partitioning). Dense-city
+ * tiles are the skew risk: the canvas is an associative monoid
+ * (Canvas.merge), so skewed tiles can be salted into sub-groups and
+ * merged; AQE handles moderate skew.
  */
 object Render {
   /** Add a global `rank` column over the (cell, meta)-sorted order —
@@ -155,91 +160,62 @@ object Render {
   private def circleSwapsAt(p: RenderParams, step: Int, z: Int, row: Long): Boolean =
     step > 1 && p.cloudSize(z, 0, row.toInt) * p.tilesize > .0625
 
-  /** Point draw commands for zoom zDraw (own tile + spill ring).
-    * `emitSpill = false` reproduces assemble mode, where the reference
-    * skips the neighbor-probe loop entirely (do_tile render.c:947:
-    * `&& !assemble`) — brush splats and clouds are clipped at tile
-    * windows instead of pulled from neighbors. */
-  private def pointCmds(points: DataFrame, zDraw: Int, p: RenderParams,
-                        emitSpill: Boolean = true): Dataset[FeatCmd] = {
-    val spark = points.sparkSession
+  /** Cloud-mode point draw commands for zoom zDraw (own tile + receiver
+    * ring). `emitSpill = false` reproduces assemble mode, where the
+    * reference skips the neighbor-probe loop entirely (do_tile
+    * render.c:947: `&& !assemble`) — clouds are clipped at tile windows
+    * instead of pulled from neighbors. */
+  private def pointCmds(src: Dataset[(Long, Long, Long)], zDraw: Int, p: RenderParams,
+                        emitSpill: Boolean): Dataset[FeatCmd] = {
+    val spark = src.sparkSession
     import spark.implicits._
     val (step, _, _) = p.pointParams(zDraw)
-    val circleMode = p.circle > 0
-    // circle mode with striding: the stride decision is per RECEIVING
-    // tile row (the step/innerstep swap depends on the receiver's cloud
-    // pixel size), so the rank must ride into the flatMap
-    val perReceiverStride = circleMode && step > 1
-    val sampled = if (step <= 1 || perReceiverStride) points
-      else points.filter(col("rank") % step === 0)
-    val spill = emitSpill && brushSpills(p, zDraw)
     // widest possible receiver ring at this zoom = ring at the extreme-
     // latitude row (row 0); bounds the per-record row scan
-    val dyMax = if (circleMode) circleRing(p, zDraw, 0L) else 0
-    val hasMeta = points.columns.contains("meta")
-    val hasRank = points.columns.contains("rank")
-    sampled.select(col("cell"),
-      (if (hasMeta) col("meta") else lit(0L)).as("meta"),
-      (if (hasRank) col("rank") else lit(0L)).as("rank"))
-      .as[(Long, Long, Long)]
-      .flatMap { case (cell, meta, rank) =>
-        val tx = Cell.tileX(cell, zDraw)
-        val ty = Cell.tileY(cell, zDraw)
-        val n = 1L << zDraw
-        val strided = step > 1 && rank % step == 0
-        if (!circleMode) {
-          val own = FeatCmd(Cell.tileKey(zDraw, tx, ty), -1, Array(cell), meta, own = true)
-          if (!spill) Iterator.single(own)
-          else {
-            val nbrs = for {
-              dx <- -1 to 1; dy <- -1 to 1
-              if dx != 0 || dy != 0
-              nx = tx + dx; ny = ty + dy
-              if ny >= 0 && ny < n && nx >= 0 && nx < n
-            } yield FeatCmd(Cell.tileKey(zDraw, nx, ny),
-              (-dx + 1L) * 3 + (-dy + 1), Array(cell), meta, own = false)
-            Iterator.single(own) ++ nbrs.iterator
-          }
-        } else {
-          // circle mode: receiver-dependent ring radius AND striding.
-          // A record reaches receiver (rx, ry) iff it is within the
-          // receiver's ring r(ry) and passes the receiver's stride rule
-          // (unstrided when the receiver swaps step into innerstep).
-          // Emission is a LAZY iterator — a degenerate giant cloud
-          // streams its (2r+1)^2 commands through the shuffle writer
-          // instead of buffering them in task memory, so the ring needs
-          // no safety cap.
-          def passes(row: Long): Boolean =
-            step <= 1 || strided || circleSwapsAt(p, step, zDraw, row)
-          val own =
-            if (passes(ty))
-              Iterator.single(FeatCmd(Cell.tileKey(zDraw, tx, ty), -1, Array(cell), meta, own = true))
-            else Iterator.empty
-          // scan candidate receiver rows; a receiver at row ry reaches
-          // this record iff |ry - ty| <= ring(ry) (ring grows poleward)
-          val dyLo = if (emitSpill) -dyMax else dyMax + 1
-          val spillIt = (dyLo to dyMax).iterator.flatMap { dy =>
-            val ry = ty + dy
-            if (ry < 0 || ry >= n) Iterator.empty
-            else {
-              val r = circleRing(p, zDraw, ry)
-              if (math.abs(dy) <= r && passes(ry)) {
-                (-r to r).iterator.flatMap { dx =>
-                  val rx = tx + dx
-                  if (rx >= 0 && rx < n && (dx != 0 || dy != 0)) {
-                    // receiver probe order: xx ascending outer, yy inner
-                    // (render.c:957-965); sender offset inside that loop
-                    val slot = (r - dx).toLong * (2 * r + 1) + (r - dy)
-                    Iterator.single(FeatCmd(Cell.tileKey(zDraw, rx.toInt, ry.toInt), slot,
-                      Array(cell), meta, own = false))
-                  } else Iterator.empty
-                }
+    val dyMax = circleRing(p, zDraw, 0L)
+    src.flatMap { case (cell, meta, rank) =>
+      val tx = Cell.tileX(cell, zDraw)
+      val ty = Cell.tileY(cell, zDraw)
+      val n = 1L << zDraw
+      val strided = step > 1 && rank % step == 0
+      // receiver-dependent ring radius AND striding.
+      // A record reaches receiver (rx, ry) iff it is within the
+      // receiver's ring r(ry) and passes the receiver's stride rule
+      // (unstrided when the receiver swaps step into innerstep).
+      // Emission is a LAZY iterator — a degenerate giant cloud
+      // streams its (2r+1)^2 commands through the shuffle writer
+      // instead of buffering them in task memory, so the ring needs
+      // no safety cap.
+      def passes(row: Long): Boolean =
+        step <= 1 || strided || circleSwapsAt(p, step, zDraw, row)
+      val own =
+        if (passes(ty))
+          Iterator.single(FeatCmd(Cell.tileKey(zDraw, tx, ty), -1, Array(cell), meta, own = true))
+        else Iterator.empty
+      // scan candidate receiver rows; a receiver at row ry reaches
+      // this record iff |ry - ty| <= ring(ry) (ring grows poleward)
+      val dyLo = if (emitSpill) -dyMax else dyMax + 1
+      val spillIt = (dyLo to dyMax).iterator.flatMap { dy =>
+        val ry = ty + dy
+        if (ry < 0 || ry >= n) Iterator.empty
+        else {
+          val r = circleRing(p, zDraw, ry)
+          if (math.abs(dy) <= r && passes(ry)) {
+            (-r to r).iterator.flatMap { dx =>
+              val rx = tx + dx
+              if (rx >= 0 && rx < n && (dx != 0 || dy != 0)) {
+                // receiver probe order: xx ascending outer, yy inner
+                // (render.c:957-965); sender offset inside that loop
+                val slot = (r - dx).toLong * (2 * r + 1) + (r - dy)
+                Iterator.single(FeatCmd(Cell.tileKey(zDraw, rx.toInt, ry.toInt), slot,
+                  Array(cell), meta, own = false))
               } else Iterator.empty
             }
-          }
-          own ++ spillIt
+          } else Iterator.empty
         }
       }
+      own ++ spillIt
+    }
   }
 
   /** Line draw commands for zoom zDraw: the pyramid lookup inverted.
@@ -346,85 +322,65 @@ object Render {
     }
   }
 
+  /** The narrow (cell, meta, rank) projection every point emitter reads.
+    * A missing meta column renders as meta 0; rank is read only when some
+    * zoom step-samples (step > 1). */
+  private def narrow(points: DataFrame, steps: Array[Long]): DataFrame =
+    points.select(col("cell"),
+      (if (points.columns.contains("meta")) col("meta") else lit(0L)).as("meta"),
+      (if (steps.exists(_ > 1)) col("rank") else lit(0L)).as("rank"))
+
+  /** Is a record of this global rank drawn at a zoom with this step?
+    * A step <= 1 (pointParams rounds small exponents down to 0) means
+    * every record is drawn. */
+  private def sampled(rank: Long, step: Long): Boolean = step <= 1 || rank % step == 0
+
+  /** THE draw-command emitter behind every render entry point: every
+    * zoom's commands for points and lines, unioned into one dataset that
+    * feeds one shuffle by tile. Points take the narrow projection, then
+    * the read-balance fan-out (a small ranked snapshot packs into a
+    * handful of scan splits, which would run the zooms-x command
+    * emission on those few tasks while the rest of the host idles; rank
+    * and meta are STORED values, so moving rows changes no command),
+    * then one flatMap over all zooms — or, in cloud mode, the per-zoom
+    * receiver-ring emitters. Lines take the per-zoom pyramid lookup.
+    * `pointSpill = false` is assemble mode (no neighbor spill). */
+  private def commands(points: Option[DataFrame], lines: Option[Dataset[Feature]], zooms: Seq[Int],
+                       mapbits: Int, p: RenderParams, pointSpill: Boolean): Dataset[FeatCmd] = {
+    require(points.nonEmpty || lines.nonEmpty, "no input")
+    val pc = points.map { pts =>
+      import pts.sparkSession.implicits._
+      val zArr = zooms.toArray
+      val steps = zArr.map(z => p.pointParams(z)._1.toLong)
+      val src = graft.ops.ReadBalance.fanOut(narrow(pts, steps)).as[(Long, Long, Long)]
+      if (p.circle > 0) zooms.map(z => pointCmds(src, z, p, pointSpill)).reduce(_ union _)
+      else pyramidCmds(src, zArr, steps, zArr.map(z => pointSpill && brushSpills(p, z)))
+    }
+    val lc = lines.map(ls => zooms.map(z => lineCmds(ls, z, mapbits, p)).reduce(_ union _))
+    (pc ++ lc).reduce(_ union _)
+  }
+
   /**
-   * Render every tile at zoom zDraw containing at least one feature's
-   * first vertex (the reference's enumerate-driven tileset rule),
-   * or all touched tiles when requireOwn = false (single-tile render).
+   * Render `zooms` in ONE pass + ONE shuffle: the tile key embeds z, so
+   * a whole pyramid of points and lines is a single job regardless of
+   * depth. Renders every tile containing at least one feature's first
+   * vertex (the reference's enumerate-driven tileset rule), or all
+   * touched tiles when requireOwn = false (single-tile render); `only`
+   * restricts the output to the tile keys it accepts.
    */
   def renderTiles(points: Option[DataFrame], lines: Option[Dataset[Feature]],
-                  zDraw: Int, mapbits: Int, p: RenderParams,
+                  zooms: Seq[Int], mapbits: Int, p: RenderParams,
                   requireOwn: Boolean = true,
-                  only: Option[(Int, Int) => Boolean] = None,
+                  only: Option[Long => Boolean] = None,
                   pointSpill: Boolean = true): Dataset[TileOut] = {
-    val spark = points.map(_.sparkSession).orElse(lines.map(_.sparkSession)).get
-    import spark.implicits._
-    val pc = points.map(pointCmds(_, zDraw, p, emitSpill = pointSpill))
-    val lc = lines.map(lineCmds(_, zDraw, mapbits, p))
-    val all = (pc, lc) match {
-      case (Some(a), Some(b)) => a.union(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case _ => throw new IllegalArgumentException("no input")
-    }
-    val cmds = only match {
-      case Some(pred) =>
-        all.filter(c => pred(Cell.tileKeyX(c.tkey), Cell.tileKeyY(c.tkey)))
-      case None => all
-    }
-    processGrouped(cmds) { (tkey, recs) =>
-      val z = Cell.tileKeyZ(tkey)
-      val tx = Cell.tileKeyX(tkey)
-      val ty = Cell.tileKeyY(tkey)
-      sortRecs(recs)
-      if (requireOwn && !recs.exists(_.own)) Iterator.empty
-      else {
-        val canvas = renderCanvas(recs, z, tx, ty, mapbits, p)
-        val rgba = ToneMap(canvas, p)
-        Iterator.single(TileOut(z, tx, ty, Png.encode(rgba, p.tilesize, p.tilesize)))
-      }
-    }
+    val all = commands(points, lines, zooms, mapbits, p, pointSpill)
+    val cmds = only.fold(all)(pred => all.filter(c => pred(c.tkey)))
+    processGrouped(cmds)(renderOne(_, _, mapbits, p, requireOwn))
   }
 
-  /** Convenience: points only. */
-  def renderPoints(points: DataFrame, zDraw: Int, mapbits: Int, p: RenderParams): Dataset[TileOut] =
-    renderTiles(Some(points), None, zDraw, mapbits, p)
-
-  /** Render a whole zoom pyramid in ONE pass + ONE shuffle: a single
-    * flatMap emits every zoom's commands (the tile key embeds z), so
-    * the tileset build is one job regardless of pyramid depth. */
-  def renderPyramid(points: DataFrame, zooms: Seq[Int], mapbits: Int, p: RenderParams): Dataset[TileOut] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    if (p.circle > 0) {
-      // circle clouds need receiver-dependent rings and striding — reuse
-      // the single-zoom command builder per zoom (still ONE shuffle: the
-      // unions feed one repartition in processGrouped)
-      val cmds = zooms.map(z => pointCmds(points, z, p)).reduce(_ union _)
-      return processGrouped(cmds)(renderOne(_, _, mapbits, p, requireOwn = true))
-    }
-    val zArr = zooms.toArray
-    val steps = zArr.map(z => p.pointParams(z)._1.toLong)
-    val spills = zArr.map(z => brushSpills(p, z))
-    val needRank = steps.exists(_ > 1)
-    val hasMeta = points.columns.contains("meta")
-    // read-balance BEFORE the per-zoom command flatMap: a small ranked
-    // snapshot packs into a handful of scan splits (openCost-packed
-    // files), which would run the zooms-x command emission feeding the
-    // render shuffle on those few tasks while the rest of the host
-    // idles. No-op whenever the input already carries >= cores splits
-    // (the catalog-scale case). Rank/meta are STORED values — moving
-    // rows does not change any command, and the render groups re-key by
-    // tile after this anyway.
-    val narrow = points.select(col("cell"),
-      (if (hasMeta) col("meta") else lit(0L)).as("meta"),
-      (if (needRank) col("rank") else lit(0L)).as("rank"))
-    val src = graft.ops.ReadBalance.fanOut(narrow).as[(Long, Long, Long)]
-    // one shared command emitter + finisher (pyramidCmds/renderOne) —
-    // an earlier inline copy here drifted from the salted path's once
-    val cmds = pyramidCmds(src, zArr,
-      zArr.zip(steps).toMap, zArr.zip(spills).toMap)
-    processGrouped(cmds)(renderOne(_, _, mapbits, p, requireOwn = true))
-  }
+  /** A point pyramid from a ranked table (renderTiles over points only). */
+  def renderPyramid(points: DataFrame, zooms: Seq[Int], mapbits: Int, p: RenderParams): Dataset[TileOut] =
+    renderTiles(Some(points), None, zooms, mapbits, p)
 
   /** Leaflet-retina tiles (`render -r`, render.c:900-914): tile (z,x,y)
     * is rendered from its PARENT zoom's records and parameters at double
@@ -438,16 +394,8 @@ object Render {
     require(z > 0, "retina tiles need z > 0 (the reference renders z=0 normally)")
     val zr = z - 1
     val p2 = p.copy(tilesize = p.tilesize * 2)
-    val pc = points.map(pointCmds(_, zr, p2))
-    val lc = lines.map(lineCmds(_, zr, mapbits, p2))
-    val cmds = (pc, lc) match {
-      case (Some(a), Some(b)) => a.union(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case _ => throw new IllegalArgumentException("no input")
-    }
     val ts = p.tilesize
-    processGrouped(cmds) { (tkey, recs) =>
+    processGrouped(commands(points, lines, Seq(zr), mapbits, p2, pointSpill = true)) { (tkey, recs) =>
       sortRecs(recs)
       if (requireOwn && !recs.exists(_.own)) Iterator.empty
       else {
@@ -476,7 +424,8 @@ object Render {
   def rasterDebugDump(points: DataFrame, zDraw: Int, txSel: Int, tySel: Int,
                       mapbits: Int, p: RenderParams): Seq[String] = {
     val want = Cell.tileKey(zDraw, txSel, tySel)
-    val recs = pointCmds(points, zDraw, p).filter(_.tkey == want).collect()
+    val recs = commands(Some(points), None, Seq(zDraw), mapbits, p, pointSpill = true)
+      .filter(_.tkey == want).collect()
     sortRecs(recs)
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     val (_, brush0, _) = p.pointParams(zDraw)
@@ -543,41 +492,6 @@ object Render {
     out.toSeq
   }
 
-  /** Full mixed tileset (points + polylines, every zoom) in ONE job and
-    * ONE shuffle: the per-zoom point commands come from the pyramid
-    * emitter and every zoom's line commands union into the same
-    * repartition — a complete z0..N tileset build is a single pass over
-    * each input regardless of pyramid depth. */
-  def renderPyramidAll(points: Option[DataFrame], lines: Option[Dataset[Feature]],
-                       zooms: Seq[Int], mapbits: Int, p: RenderParams): Dataset[TileOut] = {
-    require(points.nonEmpty || lines.nonEmpty, "no input")
-    val spark = points.map(_.sparkSession).orElse(lines.map(_.sparkSession)).get
-    import spark.implicits._
-    val pc: Option[Dataset[FeatCmd]] = points.map { pts =>
-      if (p.circle > 0) zooms.map(z => pointCmds(pts, z, p)).reduce(_ union _)
-      else {
-        val zArr = zooms.toArray
-        val steps = zArr.map(z => p.pointParams(z)._1.toLong)
-        val spillsArr = zArr.map(z => brushSpills(p, z))
-        val needRank = steps.exists(_ > 1)
-        val hasMeta = pts.columns.contains("meta")
-        val src = pts.select(col("cell"),
-          (if (hasMeta) col("meta") else lit(0L)).as("meta"),
-          (if (needRank) col("rank") else lit(0L)).as("rank")).as[(Long, Long, Long)]
-        pyramidCmds(src, zArr, zArr.zip(steps).toMap, zArr.zip(spillsArr).toMap)
-      }
-    }
-    val lc: Option[Dataset[FeatCmd]] =
-      lines.map(ls => zooms.map(z => lineCmds(ls, z, mapbits, p)).reduce(_ union _))
-    val cmds = (pc, lc) match {
-      case (Some(a), Some(b)) => a.union(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case _ => throw new IllegalArgumentException("no input")
-    }
-    processGrouped(cmds)(renderOne(_, _, mapbits, p, requireOwn = true))
-  }
-
   /** Tile membership of polylines at zoom zDraw — the line→tile
     * enumeration that drives the pyramid join (reference do_tile
     * render.c:969-1002 inverted), as (z, x, y, nlines) rows. This is
@@ -604,18 +518,8 @@ object Render {
   def renderVectorTiles(points: Option[DataFrame], lines: Option[Dataset[Feature]],
                         zDraw: Int, mapbits: Int, p: RenderParams,
                         requireOwn: Boolean = true): Dataset[TileOut] = {
-    val spark = points.map(_.sparkSession).orElse(lines.map(_.sparkSession)).get
-    import spark.implicits._
-    val pc = points.map(pointCmds(_, zDraw, p))
-    val lc = lines.map(lineCmds(_, zDraw, mapbits, p))
-    val cmds = (pc, lc) match {
-      case (Some(a), Some(b)) => a.union(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case _ => throw new IllegalArgumentException("no input")
-    }
     val ext = Mvt.Extent
-    processGrouped(cmds) { (tkey, recs) =>
+    processGrouped(commands(points, lines, Seq(zDraw), mapbits, p, pointSpill = true)) { (tkey, recs) =>
       val z = Cell.tileKeyZ(tkey)
       val tx = Cell.tileKeyX(tkey)
       val ty = Cell.tileKeyY(tkey)
@@ -701,13 +605,8 @@ object Render {
     // unsalted path (clouds self-limit: meta dots cap per record)
     if (p.circle > 0) return renderPyramid(points, zooms, mapbits, p)
     // hot tiles: sampled own-count per (z,tile) above threshold
-    val hasMeta = points.columns.contains("meta")
-    val steps = zooms.map(z => z -> p.pointParams(z)._1.toLong).toMap
-    val needRank = steps.values.exists(_ > 1)
-    val src0 = points.select(col("cell"),
-      (if (hasMeta) col("meta") else lit(0L)).as("meta"),
-      (if (needRank) col("rank") else lit(0L)).as("rank")).as[(Long, Long, Long)]
     val zArr = zooms.toArray
+    val steps = zArr.map(z => p.pointParams(z)._1.toLong)
     // per-tile: own-record count (hot detection) AND whether any own
     // record would set `further` (draw a bb>1 brush) — the spill gate.
     // The unsalted path sets `further` while scanning own records
@@ -717,13 +616,14 @@ object Render {
     // precomputed over ALL own records, not ignored (ignoreFurther=true
     // drew spill brushes on tiles where the unsalted/reference path
     // draws none — e.g. metabrush tiles whose metas are all 0/1).
-    val hotAgg: Map[Long, Boolean] = src0.flatMap { case (cell, meta, rank) =>
-      zArr.iterator.filter(z => rank % steps(z) == 0)
-        .map { z =>
+    val hotAgg: Map[Long, Boolean] = narrow(points, steps).as[(Long, Long, Long)]
+      .flatMap { case (cell, meta, rank) =>
+        zArr.indices.iterator.filter(zi => sampled(rank, steps(zi))).map { zi =>
+          val z = zArr(zi)
           val ty = Cell.tileY(cell, z)
           (Cell.tileKey(z, Cell.tileX(cell, z), ty), ownSetsFurther(z, ty, meta, p))
         }
-    }.groupByKey(_._1)
+      }.groupByKey(_._1)
       .agg(count(lit(1)).as[Long], max(col("_2")).as[Boolean])
       .filter(_._2 > hotThreshold)
       .map(t => (t._1, t._3))
@@ -732,10 +632,8 @@ object Render {
     if (hotAgg.isEmpty) return renderPyramid(points, zooms, mapbits, p)
     val hotB = spark.sparkContext.broadcast(hotAgg)
 
-    val cmds = pyramidCmds(src0, zArr, steps, zooms.map(z => z -> brushSpills(p, z)).toMap)
-    val cold = processGrouped(cmds.filter(c => !hotB.value.contains(c.tkey))) { (tkey, recs) =>
-      renderOne(tkey, recs, mapbits, p, requireOwn = true)
-    }
+    val cold = renderTiles(Some(points), None, zooms, mapbits, p,
+      only = Some(k => !hotB.value.contains(k)))
     // hot path: salt -> partial canvases -> merge -> tone map. BOTH
     // shuffles go through streamGroups (explicit repartition): a bare
     // groupByKey exchange here is exactly the tiny-but-CPU-heavy shape
@@ -744,7 +642,8 @@ object Render {
     // invariant; the cold path already did this via processGrouped).
     val saltExpr = expr(s"pmod(vertices[0] ^ meta, ${salts}L)")
     val partials = streamGroups(
-      cmds.filter(c => hotB.value.contains(c.tkey)),
+      commands(Some(points), None, zooms, mapbits, p, pointSpill = true)
+        .filter(c => hotB.value.contains(c.tkey)),
       Seq(col("tkey"), saltExpr),
       (c: FeatCmd) => (c.tkey, Math.floorMod(c.vertices(0) ^ c.meta, salts.toLong))) {
       (key, recs) =>
@@ -797,9 +696,10 @@ object Render {
     bb > 1
   }
 
-  /** Emit pyramid commands from a typed (cell, meta, rank) source. */
+  /** Point draw commands (own tile + 3x3 spill ring where the brush
+    * spills) for every zoom of zArr from one (cell, meta, rank) source. */
   private def pyramidCmds(src: Dataset[(Long, Long, Long)], zArr: Array[Int],
-                          steps: Map[Int, Long], spills: Map[Int, Boolean]): Dataset[FeatCmd] = {
+                          steps: Array[Long], spills: Array[Boolean]): Dataset[FeatCmd] = {
     val spark = src.sparkSession
     import spark.implicits._
     src.flatMap { case (cell, meta, rank) =>
@@ -807,11 +707,11 @@ object Render {
       var zi = 0
       while (zi < zArr.length) {
         val z = zArr(zi)
-        if (rank % steps(z) == 0) {
+        if (sampled(rank, steps(zi))) {
           val tx = Cell.tileX(cell, z)
           val ty = Cell.tileY(cell, z)
           out += FeatCmd(Cell.tileKey(z, tx, ty), -1, Array(cell), meta, own = true)
-          if (spills(z)) {
+          if (spills(zi)) {
             val n = 1L << z
             var dx = -1
             while (dx <= 1) {

@@ -21,16 +21,6 @@ object Sinks {
     features.map(dumpTextLine(_, metabits))
   }
 
-  /** S7: GeoJSON dump (`render -D`, dump.c:21-68). Delegates to the
-    * reference-exact [[dumpGeoJsonLine]] — the previous parallel
-    * implementation nested LineString coordinates one level too deep
-    * (invalid GeoJSON). */
-  def geoJsonDump(features: Dataset[Feature], metabits: Int): Dataset[String] = {
-    val spark = features.sparkSession
-    import spark.implicits._
-    features.map(dumpGeoJsonLine(_, metabits))
-  }
-
   /** One dump_out text row (dump.c:70-90): "lat,lon ... [bits:meta ]// hex "
     * — each field is space-TERMINATED like the reference's printf. */
   def dumpTextLine(f: Feature, metabits: Int): String = {
@@ -261,9 +251,12 @@ object Sinks {
     val outH = ((y2 - y1 + fy2 - fy1) * ts).toInt
     require(outW.toLong * outH <= 10000L * 10000L, "Image too big")
 
-    val tiles = graft.render.Render.renderTiles(points, lines, z, mapbits, p,
+    val tiles = graft.render.Render.renderTiles(points, lines, Seq(z), mapbits, p,
       requireOwn = false,
-      only = Some((tx, ty) => tx >= x1 && tx <= x2 && ty >= y1 && ty <= y2),
+      only = Some { k =>
+        val tx = Cell.tileKeyX(k); val ty = Cell.tileKeyY(k)
+        tx >= x1 && tx <= x2 && ty >= y1 && ty <= y2
+      },
       pointSpill = false)
       .collect()
     val big = new Array[Byte](outW * outH * 4)

@@ -412,14 +412,13 @@ object StreamOps {
               col("cell") >= lo && col("cell") <= hi
             }.toIndexedSeq)
             val subset = spark.read.parquet(snapshotDir).filter(cond)
-            // broadcast the affected-tile set instead of capturing it in
-            // |zArr| task closures (the renderPyramidSalted hotB pattern)
+            // every step-1 zoom in ONE render: one scan of the subset,
+            // one shuffle by tile. The affected-tile set is broadcast
+            // instead of captured in the task closure (the
+            // renderPyramidSalted hotB pattern).
             val affectedB = spark.sparkContext.broadcast(affected)
-            val tiles = zArr.map { z =>
-              graft.render.Render.renderTiles(Some(subset), None, z, mapbits, p,
-                requireOwn = true,
-                only = Some((tx, ty) => affectedB.value.contains(Cell.tileKey(z, tx, ty))))
-            }.reduce(_ union _)
+            val tiles = graft.render.Render.renderTiles(Some(subset), None, zArr.toSeq, mapbits, p,
+              only = Some(k => affectedB.value.contains(k)))
             graft.sinks.Sinks.writeTileset(tiles, tilesDir, snapshotDir)
             }
             // wholesale low-zoom cadence: batch 0 PLUS every

@@ -44,8 +44,8 @@ class GoldenLineSpec extends AnyFunSuite {
     val (rc, png) = RefBinaries.run("render", flags ++ Seq(refDir, z.toString, x.toString, y.toString))
     assert(rc == 0)
     val (refRgba, _, _) = Png.decode(png)
-    val tiles = Render.renderTiles(None, Some(featuresDs), z, mapbits, params,
-      requireOwn = false, only = Some((tx, ty) => tx == x && ty == y)).collect()
+    val tiles = Render.renderTiles(None, Some(featuresDs), Seq(z), mapbits, params,
+      requireOwn = false, only = Some(_ == Cell.tileKey(z, x, y))).collect()
     val ours = tiles.find(t => t.x == x && t.y == y)
     // a tile no feature touches is pure background (the reference still
     // emits a PNG; our pipeline emits nothing — equivalent output)
@@ -85,16 +85,16 @@ class GoldenLineSpec extends AnyFunSuite {
     }
   }
 
-  test("renderPyramidAll (mixed, one shuffle) is byte-identical to per-zoom renders") {
+  test("multi-zoom renderTiles (mixed, one shuffle) is byte-identical to per-zoom renders") {
     import spark.implicits._
     // points from the line corpus's first vertices + the lines themselves
     val pts = featuresDs.map(f => (f.cell, f.meta)).toDF("cell", "meta")
     val zooms = 14 to 16 // step == 1 at these zooms: no rank needed
     val p = RenderParams()
-    val onePass = Render.renderPyramidAll(Some(pts), Some(featuresDs), zooms, mapbits, p)
+    val onePass = Render.renderTiles(Some(pts), Some(featuresDs), zooms, mapbits, p)
       .collect().map(t => ((t.z, t.x, t.y), t.png)).toMap
     val perZoom = zooms.map(z =>
-      Render.renderTiles(Some(pts), Some(featuresDs), z, mapbits, p))
+      Render.renderTiles(Some(pts), Some(featuresDs), Seq(z), mapbits, p))
       .reduce(_ union _)
       .collect().map(t => ((t.z, t.x, t.y), t.png)).toMap
     assert(onePass.keySet == perZoom.keySet,

@@ -67,7 +67,7 @@ class GoldenRenderSpec extends AnyFunSuite {
   }
 
   def ourTile(z: Int, x: Int, y: Int, params: RenderParams = RenderParams()): Option[Array[Byte]] = {
-    val tiles = Render.renderPoints(pointsDf, z, mapbits, params).collect()
+    val tiles = Render.renderTiles(Some(pointsDf), None, Seq(z), mapbits, params).collect()
     tiles.find(t => t.x == x && t.y == y).map(_.png)
   }
 
@@ -196,8 +196,8 @@ class GoldenRenderSpec extends AnyFunSuite {
         (Cell.truncate(Cell.encode(Mercator.lonToX32(lon).toInt, Mercator.latToY32(lat).toInt), mapbits), m)
       }.sortBy(identity)
     val df = cells.zipWithIndex.map { case ((c, m), i) => (c, m, i.toLong) }.toDF("cell", "meta", "rank")
-    val our = Render.renderTiles(Some(df), None, z, mapbits, params,
-      requireOwn = false, only = Some((x, y) => x == tx && y == ty))
+    val our = Render.renderTiles(Some(df), None, Seq(z), mapbits, params,
+      requireOwn = false, only = Some(_ == Cell.tileKey(z, tx, ty)))
       .collect().find(t => t.x == tx && t.y == ty)
     assert(our.isDefined, "far receiver rendered no tile — ring truncated")
     val (refRgba, _, _) = Png.decode(refPng)

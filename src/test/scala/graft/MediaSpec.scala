@@ -646,7 +646,7 @@ class MediaSpec extends AnyFunSuite {
   test("tileset writer: z/x/y.png layout + metadata.json, ONE render job") {
     import spark.implicits._
     val geo = ImageTable.generateGeo(spark, 1000).toDF().select(col("cell"), col("meta"))
-    val tiles = graft.render.Render.renderTiles(Some(geo), None, 15, 48, graft.core.RenderParams())
+    val tiles = graft.render.Render.renderTiles(Some(geo), None, Seq(15), 48, graft.core.RenderParams())
     val dir = java.nio.file.Files.createTempDirectory("tileset").toString
     // the zoom range for metadata.json must ride along in the write pass
     // (round-1 collected distinct zooms first = a full second render).

@@ -77,36 +77,36 @@ class RenderPinSpec extends AnyFunSuite {
 
   val cases: Seq[(String, () => String)] = Seq(
     "renderPoints z13" -> (() =>
-      digestTiles(Render.renderPoints(points, 13, mapbits, RenderParams()).collect())),
+      digestTiles(Render.renderTiles(Some(points), None, Seq(13), mapbits, RenderParams()).collect())),
     "renderTiles z10 step sampling" -> (() =>
-      digestTiles(Render.renderTiles(Some(points), Some(lines), 10, mapbits, RenderParams()).collect())),
+      digestTiles(Render.renderTiles(Some(points), Some(lines), Seq(10), mapbits, RenderParams()).collect())),
     "renderTiles z15 brush spill" -> (() =>
-      digestTiles(Render.renderTiles(Some(points), Some(lines), 15, mapbits, RenderParams()).collect())),
+      digestTiles(Render.renderTiles(Some(points), Some(lines), Seq(15), mapbits, RenderParams()).collect())),
     "renderTiles z17 overzoom noise" -> (() =>
-      digestTiles(Render.renderTiles(Some(points), None, 17, mapbits, RenderParams()).collect())),
+      digestTiles(Render.renderTiles(Some(points), None, Seq(17), mapbits, RenderParams()).collect())),
     "renderTiles metabrush z14" -> (() =>
-      digestTiles(Render.renderTiles(Some(points), None, 14, mapbits,
+      digestTiles(Render.renderTiles(Some(points), None, Seq(14), mapbits,
         RenderParams(metabrush = true)).collect())),
     "renderTiles exponent 1.5 z10" -> (() =>
-      digestTiles(Render.renderTiles(Some(points), None, 10, mapbits,
+      digestTiles(Render.renderTiles(Some(points), None, Seq(10), mapbits,
         RenderParams(exponent = 1.5)).collect())),
     "renderTiles tilesize 512" -> (() =>
-      digestTiles(Render.renderTiles(Some(points), Some(lines), 12, mapbits,
+      digestTiles(Render.renderTiles(Some(points), Some(lines), Seq(12), mapbits,
         RenderParams(tilesize = 512)).collect())),
     "renderPyramid z0-10 ranked snapshot" -> (() =>
       digestTiles(Render.renderPyramid(Render.readRankedSnapshot(spark, snapshot),
         0 to 10, mapbits, RenderParams()).collect())),
     "cloud renderTiles z10" -> (() =>
-      digestTiles(Render.renderTiles(Some(points), None, 10, mapbits,
+      digestTiles(Render.renderTiles(Some(points), None, Seq(10), mapbits,
         RenderParams(circle = 5000)).collect())),
     "cloud renderTiles z14" -> (() =>
-      digestTiles(Render.renderTiles(Some(points), None, 14, mapbits,
+      digestTiles(Render.renderTiles(Some(points), None, Seq(14), mapbits,
         RenderParams(circle = 5000)).collect())),
     "cloud renderPyramid z10,z14" -> (() =>
       digestTiles(Render.renderPyramid(points, Seq(10, 14), mapbits,
         RenderParams(circle = 5000)).collect())),
     "renderPyramidAll points+lines z12-16" -> (() =>
-      digestTiles(Render.renderPyramidAll(Some(points), Some(lines), 12 to 16, mapbits,
+      digestTiles(Render.renderTiles(Some(points), Some(lines), 12 to 16, mapbits,
         RenderParams()).collect())),
     "renderRetinaTiles z14" -> (() =>
       digestTiles(Render.renderRetinaTiles(Some(points), Some(lines), 14, mapbits,
@@ -171,6 +171,20 @@ class RenderPinSpec extends AnyFunSuite {
       val got = run()
       info(s"$name -> $got")
       assert(recorded.get(name).contains(got), s"digest for '$name' is $got")
+    }
+  }
+
+  test("exponent 0.5 (step 0 below z12): pyramid and salted pyramid draw every occupied tile") {
+    val p = RenderParams(exponent = 0.5)
+    val zooms = 9 to 12
+    assert(zooms.map(p.pointParams(_)._1) == Seq(0, 0, 0, 1))
+    val occupied = (for (z <- zooms; (c, _) <- cellRows) yield (z, Cell.tileX(c, z), Cell.tileY(c, z))).toSet
+    val plain = Render.renderPyramid(points, zooms, mapbits, p).collect()
+    val salted = Render.renderPyramidSalted(points, zooms, mapbits, p, hotThreshold = 20, salts = 2).collect()
+    for (tiles <- Seq(plain, salted)) {
+      val keys = tiles.map(t => (t.z, t.x, t.y))
+      assert(keys.length == keys.distinct.length)
+      assert(keys.toSet == occupied)
     }
   }
 }

@@ -191,7 +191,7 @@ class StreamingSaltSpec extends AnyFunSuite {
     val full = spark.read.parquet(snap)
     val ranked = graft.render.Render.withGlobalRank(full.select(col("cell"), col("meta")))
     val expected = (Seq(14, 15).map(z =>
-      graft.render.Render.renderTiles(Some(full), None, z, 48, p)) :+
+      graft.render.Render.renderTiles(Some(full), None, Seq(z), 48, p)) :+
       graft.render.Render.renderPyramid(ranked, Seq(6), 48, p)).reduce(_ union _)
       .collect().map(t => ((t.z, t.x, t.y), t.png)).toMap
     ranked.unpersist()
@@ -407,9 +407,9 @@ class StreamingSaltSpec extends AnyFunSuite {
         graft.core.Mercator.latToY32(40.7 + i * 0.001).toInt), (10 + i % 20).toLong)
     }.toDF("cell", "meta")
     val p = graft.core.RenderParams(circle = 1000, gamma = 1.0)
-    val t1 = graft.render.Render.renderTiles(Some(pts), None, 14, 48, p).collect()
+    val t1 = graft.render.Render.renderTiles(Some(pts), None, Seq(14), 48, p).collect()
       .map(t => ((t.x, t.y), t.png)).toMap
-    val t2 = graft.render.Render.renderTiles(Some(pts), None, 14, 48, p).collect()
+    val t2 = graft.render.Render.renderTiles(Some(pts), None, Seq(14), 48, p).collect()
       .map(t => ((t.x, t.y), t.png)).toMap
     assert(t1.nonEmpty)
     assert(t1.keySet == t2.keySet)
