@@ -85,7 +85,9 @@ class GoldenLineSpec extends AnyFunSuite {
     }
   }
 
-  test("multi-zoom renderTiles (mixed, one shuffle) is byte-identical to per-zoom renders") {
+  // The name keeps the deleted entry point it pinned; the one-shuffle mixed
+  // pyramid is now a multi-zoom renderTiles call.
+  test("renderPyramidAll (mixed, one shuffle) is byte-identical to per-zoom renders") {
     import spark.implicits._
     // points from the line corpus's first vertices + the lines themselves
     val pts = featuresDs.map(f => (f.cell, f.meta)).toDF("cell", "meta")
