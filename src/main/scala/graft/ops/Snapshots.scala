@@ -198,8 +198,10 @@ object CheckpointedTiles {
     val params = graft.core.RenderParams()
     // step-sampled zooms (z < dotBase) draw every step-th record by
     // GLOBAL rank: rank once over the whole snapshot (outside the
-    // bucket loop, so every bucket sees the same total order) — a bare
-    // (cell, meta) projection would make pointCmds' rank filter throw
+    // bucket loop, so every bucket sees the same total order) — the
+    // render's narrow projection (Render.commands) selects `rank`
+    // whenever a requested zoom has step > 1, so a bare (cell, meta)
+    // table fails analysis
     val needRank = params.pointParams(z)._1 > 1
     // read the SAME snapshot the lineage rows will record: re-reading
     // the pointer here would let a commit landing between the two reads

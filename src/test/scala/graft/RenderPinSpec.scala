@@ -82,6 +82,14 @@ class RenderPinSpec extends AnyFunSuite {
       digestTiles(Render.renderTiles(Some(points), Some(lines), Seq(10), mapbits, RenderParams()).collect())),
     "renderTiles z15 brush spill" -> (() =>
       digestTiles(Render.renderTiles(Some(points), Some(lines), Seq(15), mapbits, RenderParams()).collect())),
+    // the spill gate: a tile whose own records set no `further` (none
+    // at all, or metabrush metas of 0/1 at z13) draws no neighbour spill
+    "renderTiles z15 requireOwn = false" -> (() =>
+      digestTiles(Render.renderTiles(Some(points), None, Seq(15), mapbits, RenderParams(),
+        requireOwn = false).collect())),
+    "renderTiles metabrush z13" -> (() =>
+      digestTiles(Render.renderTiles(Some(points), None, Seq(13), mapbits,
+        RenderParams(metabrush = true)).collect())),
     "renderTiles z17 overzoom noise" -> (() =>
       digestTiles(Render.renderTiles(Some(points), None, Seq(17), mapbits, RenderParams()).collect())),
     "renderTiles metabrush z14" -> (() =>
@@ -137,6 +145,10 @@ class RenderPinSpec extends AnyFunSuite {
       "458:abe0c9375608f1e46c82c10eb72c7cf02adf0d4cbb0e535241674a29cf814d2c",
     "renderTiles z15 brush spill" ->
       "3410:60a19e87f9dce69fa5a138ec5c77387083d912f5f16e42e23695a6c50ccee0aa",
+    "renderTiles z15 requireOwn = false" ->
+      "25525:a99243963c124e2750c6410f7c2196bf6b1b58597ece90cf825c5162f3631e50",
+    "renderTiles metabrush z13" ->
+      "2840:77c303f594cb99f5696baf7e32d575e962ac07f0914fe377feccf02e2e60d600",
     "renderTiles z17 overzoom noise" ->
       "3140:d62d05cfb2ac775056abbbdca6f38eca0e407ef65f27862bd7b8f6fe65017dd6",
     "renderTiles metabrush z14" ->

@@ -14,11 +14,13 @@ import graft.tables.ImageTable
   *      small append touches, over a cell-range filtered snapshot scan;
   * plus the formatted plan of one tile range scan.
   *
-  *   sbt "Test/runMain graft.tools.ExplainDump [rows]"
+  *   sbt "Test/runMain graft.tools.ExplainDump"
   */
 object ExplainDump {
+  /** Generated corpus size: the plans under plans/render_emitter/ use it. */
+  val rows = 20000L
+
   def main(args: Array[String]): Unit = {
-    val rows = args.headOption.map(_.toLong).getOrElse(20000L)
     val spark = graft.Bench.session(4)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
