@@ -245,25 +245,37 @@ object Media {
     Png.encode(rgba, img.w, img.h)
   }
 
-  /** images df (image_id, bytes, w, h, fmt) -> (image_id, dhash):
-    * the only pass that reads the payload column; everything downstream
-    * shuffles (String, Long) rows. */
-  def dhashes(images: DataFrame): DataFrame = {
+  /** Node id of an image: xxhash64 of its image_id string, the Long
+    * node id connected components need (collision odds ~n^2/2^65 — 1e-8
+    * at a million images; at real catalog scale swap in a precomputed
+    * numeric key). The ONE derivation: dedup labels, the persisted band
+    * index and the curation funnel must agree on it. */
+  private[graft] def nid(imageId: Column): Column = xxhash64(imageId)
+
+  /** images df (image_id, bytes, w, h, fmt) -> (image_id, dhash, nid):
+    * the only pass that reads the payload column, and the projection
+    * every dedup entry point consumes. It is materialized ONCE (eager
+    * localCheckpoint — lineage-free, reclaimed by the ContextCleaner)
+    * because it feeds several consumers (pregroup, banding, the name
+    * map, the state index) and each would otherwise re-run the decode.
+    * The decode runs under [[withDecodeSplits]], so a few-split file
+    * scan re-splits at the read. */
+  def dhashes(images: DataFrame): DataFrame = withDecodeSplits(images) {
     val spark = images.sparkSession
     import spark.implicits._
     val src = images.select(col("image_id"), col("bytes"), col("w"), col("h"), col("fmt"))
-    // Decode is the CPU-bound pass: when the input arrives in fewer
-    // splits than cores (a handful of big parquet files at the default
-    // maxPartitionBytes left ~1/3 of the bench host idle), fan out
-    // BEFORE decoding (the shared ReadBalance guard — a no-op at
-    // catalog scale; prefer withDecodeSplits around the action so the
-    // scan itself re-splits and the payload bytes never shuffle).
+    // Decode is the CPU-bound pass: when the input still arrives in
+    // fewer splits than cores (a non-file source, or an unsplittable
+    // one), fan out BEFORE decoding (the shared ReadBalance guard — a
+    // no-op at catalog scale)
     graft.ops.ReadBalance.fanOut(src)
       .as[(String, Array[Byte], Int, Int, String)]
       .mapPartitions(_.map { case (id, bytes, w, h, fmt) =>
         (id, dhash64(decode(id, bytes, w, h, fmt)))
       })
       .toDF("image_id", "dhash")
+      .withColumn("nid", nid(col("image_id")))
+      .localCheckpoint(true)
   }
 
   private val chunkPairs = Seq((0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3))
@@ -351,67 +363,18 @@ object Media {
     }
   }
 
-  /** Near-duplicate image pairs from dhashes via recursive chunk-pair
-    * banding: level 1 buckets on six 32-bit quarter-pair keys (<= 2
-    * differing bits leave some pair of 16-bit quarters untouched —
-    * pigeonhole); buckets hotter than the quadratic-safety cap recurse
-    * into sub-bands of their residual bits instead of degrading to
-    * star pairs, so recall is 1.0 for Hamming <= maxHamming
-    * UNCONDITIONALLY (see [[bandPairs]]). The exact Hamming check is a
-    * map-side filter on the candidate pairs (each side's 8-byte hash
-    * rides the banding) — band shuffles carry (id, hash, key) rows
-    * only, never payloads.
-    *
-    * Exact-duplicate hashes are collapsed INTERNALLY before banding
-    * (the terminal level's all-pairs bound needs one row per distinct
-    * hash — without this, a mega-cluster of identical images would go
-    * quadratic, the exact failure the old hot-bucket cap guarded):
-    * duplicates re-attach by Hamming-0 star edges to their group's min
-    * id. The output is therefore CONNECTIVITY-preserving — every true
-    * near-dup pair is in the same connected component of the result —
-    * not the full quadratic pair set when exact duplicates exist.
-    * Distinct-hash inputs (what [[imageDupClusters]] feeds after its
-    * own pregroup) get the complete verbatim pair set. */
-  def imageNearDupPairs(hashes: DataFrame, maxHamming: Int = 2): DataFrame = {
-    require(maxHamming <= 2, "chunk-pair banding only guarantees recall for Hamming <= 2")
-    val distinctH = hashes.groupBy(col("dhash")).agg(min(col("image_id")).as("image_id"))
-    val exactStars = hashes
-      .join(distinctH.select(col("dhash"), col("image_id").as("rep_id")), "dhash")
-      .filter(col("image_id") =!= col("rep_id"))
-      .select(col("rep_id").as("img_a"), col("image_id").as("img_b"))
-    val members = distinctH.select(col("image_id").as("doc_id"), col("dhash"),
-      lit(0L).as("key"), col("dhash").as("resid"))
-    // distinct over (ids, hashes): dh_a/dh_b are functions of the ids,
-    // so the dedup keys are effectively (img_a, img_b) as before
-    bandPairs(members, 64, cap = 64).distinct()
-      .filter(graft.text.TextOps.hamming64(col("dh_a"), col("dh_b")) <= maxHamming)
-      .select(col("img_a"), col("img_b"))
-      .unionByName(exactStars)
-  }
-
-  /** Exact-duplicate pregroup over an (image_id, dhash, nid)
-    * projection: identical dhashes (byte-identical and re-encoded
-    * copies — the BULK of web-corpus duplication) collapse by a plain
-    * hash aggregation, a star edge per member, so banding sees ONE
+  /** Exact-duplicate pregroup over the (nid, dhash) projection:
+    * identical dhashes (byte-identical and re-encoded copies — the BULK
+    * of web-corpus duplication) collapse by a plain hash aggregation, a
+    * star edge per member to the group's min nid, so banding sees ONE
     * representative per distinct hash (a million-copy image contributes
-    * one band row, never a mega-bucket). Returns (star edges (a, b) as
-    * nids, repIds (image_id, nid, dhash)). The grouped projection is
-    * eagerly checkpointed: its four consumers (star edges + the
-    * banding/verify sides) would each re-run the groupBy+join
-    * otherwise. SINGLE source for the batch and incremental clustering
-    * paths — the rep choice (min nid) must never diverge between
-    * them. */
-  private def exactPregroup(ids: DataFrame): (DataFrame, DataFrame) =
-    exactPregroupOf(ids, keepNames = true)
-
-  /** keepNames=false is the nid-only path ([[imageDupLabelsNid]]): the
-    * image_id string stays off the pregroup shuffle and its checkpoint
-    * entirely. The state builders keep names — they index each distinct
-    * hash's label through its rep MEMBER id downstream. */
-  private def exactPregroupOf(ids: DataFrame, keepNames: Boolean): (DataFrame, DataFrame) = {
-    val slim =
-      if (keepNames) ids.select(col("image_id"), col("nid"), col("dhash"))
-      else ids.select(col("nid"), col("dhash"))
+    * one band row, never a mega-bucket). Returns (star edges (a, b),
+    * repIds (dhash, nid)). Only 8-byte nids and hashes ride its shuffle
+    * and its checkpoint; the grouped projection is checkpointed eagerly
+    * because its consumers (star edges + the banding/verify sides)
+    * would each re-run the groupBy+join otherwise. */
+  private def exactPregroup(ids: DataFrame): (DataFrame, DataFrame) = {
+    val slim = ids.select(col("nid"), col("dhash"))
     val groups = slim.groupBy(col("dhash")).agg(min(col("nid")).as("grep"))
     val withRep = slim.join(groups, "dhash").localCheckpoint(true)
     (withRep.filter(col("nid") =!= col("grep"))
@@ -419,22 +382,33 @@ object Media {
       withRep.filter(col("nid") === col("grep")).drop("grep"))
   }
 
-  /** Near-dup edges as (a, b) nid pairs straight from the pregroup's
-    * distinct-hash rep table. Unlike the public [[imageNearDupPairs]]
-    * (which must accept arbitrary inputs), this skips the re-distinct
-    * and exact-star passes — the input is one row per distinct hash BY
-    * CONSTRUCTION — and every banding/verify shuffle carries 8-byte
-    * nids instead of image_id strings, so the downstream string->nid
-    * mapping joins disappear entirely. */
+  /** Near-dup edges as (a, b) nid pairs between the pregroup's
+    * distinct-hash reps (one row per distinct hash BY CONSTRUCTION, so
+    * the terminal banding level's all-pairs bound holds). Every
+    * banding/verify shuffle carries 8-byte nids; the hashes ride the
+    * banding and the Hamming verify is a map-side filter on the
+    * candidate pairs — no re-attach join of the hash table. */
   private def nearDupEdges(repIds: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming <= 2, "chunk-pair banding only guarantees recall for Hamming <= 2")
     val members = repIds.select(col("nid").as("doc_id"), col("dhash"),
       lit(0L).as("key"), col("dhash").as("resid"))
-    // hashes ride the banding; the Hamming verify is a map-side filter
-    // on the candidate pairs — no re-attach join of the hash table
     bandPairs(members, 64, cap = 64).distinct()
       .filter(graft.text.TextOps.hamming64(col("dh_a"), col("dh_b")) <= maxHamming)
       .select(col("img_a").as("a"), col("img_b").as("b"))
+  }
+
+  /** THE duplicate-graph edge builder, shared by the batch, state and
+    * incremental paths (the pregroup rep choice — min nid — must never
+    * diverge between them). From a (nid, dhash) projection it returns
+    * (edges (a, b) as nids, repIds (dhash, nid) — one row per distinct
+    * hash). Connectivity contract: any two images at Hamming <=
+    * maxHamming fall in one connected component of `edges` (recall 1.0,
+    * see [[bandPairs]]); `edges` is NOT the full pair set — exact copies
+    * attach by one star edge to their hash group's min nid, and banded
+    * pairs link only those reps. */
+  private[graft] def dupEdges(ids: DataFrame, maxHamming: Int): (DataFrame, DataFrame) = {
+    val (exactEdges, repIds) = exactPregroup(ids)
+    (exactEdges.unionByName(nearDupEdges(repIds, maxHamming)), repIds)
   }
 
   /** Scope `f` under a file-split size tuned so `images`' scan yields
@@ -449,8 +423,8 @@ object Media {
     * unsplittable inputs — with the conf in effect it sees the wider
     * scan and skips the shuffle. CAVEAT: maxPartitionBytes is
     * session-scoped, so a file scan PLANNED CONCURRENTLY in the same
-    * session during `f` would also get the narrowed splits — callers
-    * are the serial dedup entry points (bench, batch clustering), and a
+    * session during `f` would also get the narrowed splits — the one
+    * caller is [[dhashes]], run serially per dedup call, and a
     * session that interleaves other planning with a dedup run should
     * use a separate session (cheap: SparkSession.newSession shares the
     * context but not the conf). */
@@ -475,90 +449,56 @@ object Media {
     finally spark.conf.set(key, current)
   }
 
-  /** Full image dedup: decode -> dhash -> banded pairs -> connected
-    * components. Returns (image_id, rep); keep-one is
-    * filter(image_id === rep) after a left join back to the table. */
-  def imageDupClusters(images: DataFrame, maxHamming: Int = 2): DataFrame =
-    // materialize the (id, dhash, nid) projection ONCE: it feeds several
-    // consumers and each would otherwise re-run the payload decode
-    // pass. Eager localCheckpoint = lineage-free, reclaimed by the
-    // ContextCleaner. nid = xxhash64 of the string id, the Long node id
-    // components need (collision odds ~n^2/2^65 — 1e-8 at a million
-    // images; at real catalog scale swap in a precomputed numeric key).
-    imageDupClustersFromIds(
-      withDecodeSplits(images) {
-        dhashes(images).withColumn("nid", xxhash64(col("image_id")))
-          .localCheckpoint(true)
-      },
-      maxHamming)
-
-  /** Duplicate-graph edges (exact pregroup stars + banded near-dup
-    * pairs) of a precomputed (image_id, dhash, nid) projection —
-    * everything in nid space (no string ids ride any shuffle). */
-  private def dupEdges(ids: DataFrame, maxHamming: Int): DataFrame = {
-    val (exactEdges, repIds) = exactPregroup(ids)
-    exactEdges.unionByName(nearDupEdges(repIds, maxHamming))
-  }
-
-  /** Components + name labeling over a dup-edge list (see
-    * [[imageDupClustersFromIds]] for the output contract). */
-  private def labelsFromEdges(ids: DataFrame, edges: DataFrame): DataFrame = {
+  /** The one name adapter: (image_id, nid, rep) for every image of
+    * `ids` from its dup-graph `edges` — rep is the image_id of the
+    * component's min nid, images outside the graph label themselves.
+    * Names attach here, once, at the end. Only nids that ARE a
+    * component rep need resolving — a component-count-sized set;
+    * restricting the name map to it keeps both joins broadcastable
+    * (the unrestricted map is the FULL id table, a corpus x corpus
+    * shuffle join at scale). */
+  private def withNames(ids: DataFrame, edges: DataFrame): DataFrame = {
     val labels = graft.ops.Components
       .connectedComponents(edges)
       .withColumnRenamed("node", "nid")
       .localCheckpoint(true) // duplicate-node-sized; feeds two joins + the rep set
-    // rep names: only nids that ARE a component rep need resolving — a
-    // component-count-sized set. Restricting the name map to it keeps
-    // both joins broadcastable (the unrestricted map was the FULL id
-    // table, a corpus x corpus shuffle join at scale).
     val repSet = labels.select(col("rep")).distinct()
     val repNames = ids.select(col("nid").as("rep"), col("image_id").as("rep_id"))
       .join(repSet, "rep")
     ids.select(col("image_id"), col("nid")).join(labels, Seq("nid"), "left")
       .join(repNames, Seq("rep"), "left")
-      .select(col("image_id"), coalesce(col("rep_id"), col("image_id")).as("rep"))
+      .select(col("image_id"), col("nid"), coalesce(col("rep_id"), col("image_id")).as("rep"))
   }
 
-  /** [[imageDupClusters]] over a precomputed (image_id, dhash, nid)
-    * projection — state builders that also need the hashes pay the
-    * payload-decode pass ONCE. */
-  def imageDupClustersFromIds(ids: DataFrame, maxHamming: Int = 2): DataFrame =
-    labelsFromEdges(ids, dupEdges(ids, maxHamming))
+  /** Full image dedup: decode -> dhash -> banded pairs -> connected
+    * components. Returns (image_id, rep); keep-one is
+    * filter(image_id === rep) after a left join back to the table. */
+  def imageDupClusters(images: DataFrame, maxHamming: Int = 2): DataFrame =
+    imageDupClustersPhased(images, maxHamming)._1
 
-  /** Duplicate labels entirely in nid space: (nid, rep) with singletons
-    * mapped to themselves — the keep-best-per-cluster entry point.
-    * Unlike [[imageDupClustersFromIds]] no image_id string EVER rides a
-    * shuffle or checkpoint here (`ids` needs only nid + dhash; the
-    * nid-only pregroup keeps names off the exact-group stage too), so
+  /** Duplicate labels entirely in nid space: (nid, rep) for every row
+    * of `ids` (nid, dhash — e.g. [[dhashes]]), rep = component min nid,
+    * singletons mapped to themselves — the keep-best-per-cluster entry
+    * point. No image_id string rides a shuffle or checkpoint, so
     * downstream per-cluster aggregations move 8-byte keys only; attach
     * names at the end by joining back on nid. */
-  def imageDupLabelsNid(ids: DataFrame, maxHamming: Int = 2): DataFrame = {
-    val (exactEdges, repIds) = exactPregroupOf(ids, keepNames = false)
-    val edges = exactEdges.unionByName(nearDupEdges(repIds, maxHamming))
-    val labels = graft.ops.Components.connectedComponents(edges)
-      .withColumnRenamed("node", "nid")
-    ids.select(col("nid")).join(labels, Seq("nid"), "left")
-      .select(col("nid"), coalesce(col("rep"), col("nid")).as("rep"))
-  }
+  def imageDupLabelsNid(ids: DataFrame, maxHamming: Int = 2): DataFrame =
+    graft.ops.Components.labelAll(ids, dupEdges(ids, maxHamming)._1, "nid")
 
   /** [[imageDupClusters]] with per-phase wall timings for the bench:
     * returns (labels, decodeSec, bandSec) — decode = payload scan ->
     * dhash projection (checkpoint-forced), band = pregroup + recursive
     * banding + Hamming verify to the edge list (checkpoint-forced);
     * the remaining components+labeling cost is what the caller's
-    * terminal action pays. Same results as [[imageDupClusters]] (the
-    * phase boundaries are the checkpoints both paths already imply). */
+    * terminal action pays. */
   def imageDupClustersPhased(images: DataFrame, maxHamming: Int = 2): (DataFrame, Double, Double) = {
     val t0 = System.nanoTime()
-    val ids = withDecodeSplits(images) {
-      dhashes(images).withColumn("nid", xxhash64(col("image_id")))
-        .localCheckpoint(true)
-    }
+    val ids = dhashes(images)
     val tDecode = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
-    val edges = dupEdges(ids, maxHamming).localCheckpoint(true)
+    val edges = dupEdges(ids, maxHamming)._1.localCheckpoint(true)
     val tBand = (System.nanoTime() - t1) / 1e9
-    (labelsFromEdges(ids, edges), tDecode, tBand)
+    (withNames(ids, edges).select(col("image_id"), col("rep")), tDecode, tBand)
   }
 
   // ---------- incremental image dedup against persisted state ----------
@@ -587,17 +527,14 @@ object Media {
     val spark = images.sparkSession
     // ONE payload-decode pass feeds both the clustering and the index
     val ids = dhashes(images)
-      .withColumn("nid", xxhash64(col("image_id")))
-      .localCheckpoint(true)
-    val (exactEdges, repIds) = exactPregroup(ids)
-    val labels = labelsFromEdges(ids,
-      exactEdges.unionByName(nearDupEdges(repIds, maxHamming))).localCheckpoint(true)
-    // index rows look up each distinct hash's label through its rep
-    // member — repIds already holds one (image_id, dhash) per distinct
+    val (edges, repIds) = dupEdges(ids, maxHamming)
+    val labels = withNames(ids, edges).localCheckpoint(true)
+    // index rows take each distinct hash's label through its pregroup
+    // rep's nid — repIds already holds one (dhash, nid) per distinct
     // hash, so no extra distinct pass runs here
-    val distinctHash = repIds.select(col("dhash"), col("image_id").as("member_id"))
-      .join(labels.withColumnRenamed("image_id", "member_id"), "member_id")
-      .select(col("dhash"), col("rep"), xxhash64(col("rep")).as("rep_nid"))
+    val distinctHash = repIds.join(labels.select(col("nid"), col("rep")), "nid")
+      .select(col("dhash"), col("rep"), nid(col("rep")).as("rep_nid"))
+    val named = labels.select(col("image_id"), col("rep"))
     // rebuild under the SAME per-corpus lease the appenders hold (see
     // TextDedupState.writeTextDedupState): an unguarded DROP + overwrite
     // interleaving with a concurrent append would mix two state
@@ -612,16 +549,17 @@ object Media {
         .write.mode("overwrite").format("parquet")
         .bucketBy(buckets, "band_key").sortBy("band_key")
         .option("path", s"$dir/bands").saveAsTable(table)
-      labels.write.mode("overwrite").parquet(s"$dir/labels")
+      named.write.mode("overwrite").parquet(s"$dir/labels")
       graft.ops.StateLease.checkFenced(lease)
     } finally graft.ops.StateLease.release(lease)
-    labels
+    named
   }
 
   /** Deduplicate a NEW batch against persisted state WITHOUT touching
     * the old corpus — the only formulation that survives continuous
     * ingest at 10^12 images (re-running [[imageDupClusters]] over
     * everything per batch re-decodes and re-shuffles the world).
+    * `ids` is the batch's [[dhashes]] projection.
     *
     * Within the batch: the full recursive banding (recall 1.0 at
     * Hamming <= maxHamming). Across the batch/corpus boundary: new
@@ -639,21 +577,10 @@ object Media {
     * (newLabels(image_id, rep), merges(rep_a, merged_rep)) — apply
     * merges downstream as rep_a -> merged_rep, at most a
     * label-table-sized join, never a re-cluster. */
-  def incrementalImageDedup(newImages: DataFrame, bandsTable: String,
-                            maxHamming: Int = 2): (DataFrame, DataFrame) =
-    incrementalImageDedupFromIds(
-      dhashes(newImages).withColumn("nid", xxhash64(col("image_id")))
-        .localCheckpoint(true),
-      bandsTable, maxHamming)
-
-  /** [[incrementalImageDedup]] over a precomputed (image_id, dhash,
-    * nid) projection — lets callers that also fold state (the streaming
-    * wrapper) pay the payload-decode pass ONCE per batch. */
-  def incrementalImageDedupFromIds(ids: DataFrame, bandsTable: String,
-                                   maxHamming: Int = 2): (DataFrame, DataFrame) = {
+  def incrementalImageDedup(ids: DataFrame, bandsTable: String,
+                            maxHamming: Int = 2): (DataFrame, DataFrame) = {
     val spark = ids.sparkSession
-    val (exactEdges, repIds) = exactPregroup(ids)
-    val newNewEdges = nearDupEdges(repIds, maxHamming)
+    val (batchEdges, repIds) = dupEdges(ids, maxHamming)
     // boundary probe: new distinct hashes explode their 6 band keys and
     // join the BUCKETED index — corpus side shuffle-free — then verify
     // by exact Hamming against the matched member hash. The hit set is
@@ -672,8 +599,7 @@ object Media {
     val newOldEdges = probeHits.select(col("nid").as("a"), col("rep_nid").as("b"))
       .distinct()
     val oldReps = probeHits.select(col("rep_nid"), col("rep")).distinct()
-    val comp = graft.ops.Components.connectedComponents(
-      exactEdges.unionByName(newNewEdges).unionByName(newOldEdges))
+    val comp = graft.ops.Components.connectedComponents(batchEdges.unionByName(newOldEdges))
     // sticky labels + merge events: shared resolution (ops.StickyLabels,
     // one source with the text path)
     graft.ops.StickyLabels.resolve(comp, oldReps,
@@ -682,15 +608,15 @@ object Media {
 
   /** Fold a processed batch into the persisted dedup state so the NEXT
     * batch's probes see it: appends band rows for the batch's distinct
-    * hashes that are NOT already indexed (presence is an exact-dhash
-    * match detected through the band-0 bucket join — identical hashes
-    * share every band, so one band suffices, and the corpus side stays
-    * shuffle-free), labeled with the batch's FINAL reps from
-    * [[incrementalImageDedup]]'s newLabels; plus the labels themselves
-    * (skippable via `writeLabels` when the caller lands labels in its
-    * own idempotent sink, as the streaming wrapper does).
-    * `buckets` must match the value the state was built with (Spark
-    * refuses mismatched bucket specs on append).
+    * hashes (from its [[dhashes]] projection `ids`) that are NOT already
+    * indexed (presence is an exact-dhash match detected through the
+    * band-0 bucket join — identical hashes share every band, so one
+    * band suffices, and the corpus side stays shuffle-free), labeled
+    * with the batch's FINAL reps from [[incrementalImageDedup]]'s
+    * newLabels; plus the labels themselves (skippable via `writeLabels`
+    * when the caller lands labels in its own idempotent sink, as the
+    * streaming wrapper does). `buckets` must match the value the state
+    * was built with (Spark refuses mismatched bucket specs on append).
     *
     * Merge semantics: band rows of clusters ABSORBED by an earlier
     * merge keep their original rep — labels compose through the
@@ -699,15 +625,9 @@ object Media {
     * file under `dir` (stale leases from crashed writers are stolen
     * after 15 min): a concurrent append throws instead of corrupting
     * the bucketed index. */
-  def appendImageDedupState(newImages: DataFrame, newLabels: DataFrame,
-                            bandsTable: String, dir: String, buckets: Int): Unit =
-    appendImageDedupStateFromIds(dhashes(newImages), newLabels, bandsTable, dir, buckets)
-
-  /** [[appendImageDedupState]] over a precomputed (image_id, dhash)
-    * projection (see [[incrementalImageDedupFromIds]]). */
-  def appendImageDedupStateFromIds(ids: DataFrame, newLabels: DataFrame,
-                                   bandsTable: String, dir: String, buckets: Int,
-                                   writeLabels: Boolean = true): Unit = {
+  def appendImageDedupState(ids: DataFrame, newLabels: DataFrame,
+                            bandsTable: String, dir: String, buckets: Int,
+                            writeLabels: Boolean = true): Unit = {
     val lease = graft.ops.StateLease.acquire(dir)
     try {
       graft.ops.StateLease.checkFenced(lease)
@@ -723,14 +643,10 @@ object Media {
                                           writeLabels: Boolean): Unit = {
     val spark = ids.sparkSession
     val distinctNew = ids.groupBy(col("dhash")).agg(min(col("image_id")).as("member_id"))
-    def band0(dhash: Column): Column = { // packed (b=0, q0, q1) key
-      def quarter(i: Int) = shiftrightunsigned(dhash, i * 16).bitwiseAND(lit(0xFFFFL))
-      shiftleft(quarter(0), 16).bitwiseOR(quarter(1))
-    }
     val idx0 = spark.table(bandsTable)
       .filter(col("band_key") < (1L << 32)) // band 0 rows only
       .select(col("band_key"), col("dhash").as("old_dhash"))
-    val fresh = distinctNew.withColumn("band_key", band0(col("dhash")))
+    val fresh = distinctNew.withColumn("band_key", packedBandKeys(col("dhash")).getItem(0))
       .join(idx0, Seq("band_key"), "left")
       .groupBy(col("dhash"), col("member_id"))
       .agg(max(when(col("old_dhash") === col("dhash"), 1).otherwise(0)).as("present"))
@@ -739,7 +655,7 @@ object Media {
     fresh
       .join(newLabels.withColumnRenamed("image_id", "member_id"), "member_id")
       .select(explode(packedBandKeys(col("dhash"))).as("band_key"),
-        col("dhash"), xxhash64(col("rep")).as("rep_nid"), col("rep"))
+        col("dhash"), nid(col("rep")).as("rep_nid"), col("rep"))
       .write.mode("append").format("parquet")
       .bucketBy(buckets, "band_key").sortBy("band_key")
       .option("path", s"$dir/bands").saveAsTable(bandsTable)

@@ -40,13 +40,12 @@ object ImageCuration {
     import spark.implicits._
     val nImages = images.count()
 
-    // ONE decode pass (the dhashes fan-out guard: inputs with fewer
+    // ONE decode pass (the shared ReadBalance guard: inputs with fewer
     // splits than cores would leave the host idle on the CPU-bound pass)
-    val src = images.select(col("image_id"), col("bytes"), col("w"), col("h"), col("fmt"))
+    val src = graft.ops.ReadBalance.fanOut(
+        images.select(col("image_id"), col("bytes"), col("w"), col("h"), col("fmt")))
       .as[(String, Array[Byte], Int, Int, String)]
-    val p = spark.sparkContext.defaultParallelism
-    val balanced = if (src.rdd.getNumPartitions < p) src.repartition(p * 2) else src
-    val feats = balanced.mapPartitions(_.flatMap { case (id, bytes, w, h, fmt) =>
+    val feats = src.mapPartitions(_.flatMap { case (id, bytes, w, h, fmt) =>
         scala.util.Try {
           val img = graft.media.Media.decode(id, bytes, w, h, fmt)
           val f = graft.media.Media.features(img)
@@ -54,7 +53,7 @@ object ImageCuration {
             graft.media.Media.dhash64(img))
         }.toOption
       }).toDF("image_id", "w", "h", "pixels", "luma_buckets", "dhash")
-      .withColumn("nid", xxhash64(col("image_id")))
+      .withColumn("nid", graft.media.Media.nid(col("image_id")))
       .localCheckpoint(true)
     try {
       val nDecoded = feats.count()

@@ -175,8 +175,7 @@ object WebCuration {
         try {
           if (filtered.count() > 0) {
             val (labels, merges, bands) = graft.text.TextDedupState
-              .incrementalTextDedupPrepared(
-                filtered.select(col("doc_id"), col("text")), bandsTable)
+              .incrementalTextDedup(filtered.select(col("doc_id"), col("text")), bandsTable)
             val l = labels.localCheckpoint(true)
             try {
               filtered
@@ -187,7 +186,7 @@ object WebCuration {
               merges.write.mode("overwrite").parquet(s"$outDir/merges/batch=$batchId")
               // fold LAST: a crash before the fold replays the batch
               // wholesale (sticky labels make the replay idempotent)
-              graft.text.TextDedupState.appendTextDedupStateFromBands(
+              graft.text.TextDedupState.appendTextDedupState(
                 bands, l, bandsTable, stateDir, buckets, writeLabels = false)
             } finally l.unpersist()
           }

@@ -131,8 +131,8 @@ object StreamOps {
     * State is one Long per distinct perceptual hash, evicted at the
     * watermark — the image-side analog of [[streamingDedup]]. Exact-hash
     * only (Hamming-0: re-encodes, crop-free copies); Hamming-near pairs
-    * need the banded batch pass (Media.imageNearDupPairs) over a
-    * landed snapshot. */
+    * need the banded batch pass (Media.imageDupClusters) over a landed
+    * snapshot, or the persisted-state stream [[incrementalDedupStream]]. */
   def streamingImageDedup(images: DataFrame, watermark: String): DataFrame = {
     val spark = images.sparkSession
     import spark.implicits._
@@ -214,18 +214,14 @@ object StreamOps {
         migrateFlatSink(batch.sparkSession, labelsOut)
         migrateFlatSink(batch.sparkSession, mergesOut)
         val ids = graft.media.Media.dhashes(batch)
-          .withColumn("nid", xxhash64(col("image_id")))
-          .localCheckpoint(true)
         try {
           if (ids.count() > 0) {
-            val (labels, merges) = graft.media.Media
-              .incrementalImageDedupFromIds(ids, bandsTable)
+            val (labels, merges) = graft.media.Media.incrementalImageDedup(ids, bandsTable)
             val l = labels.localCheckpoint(true)
             try {
               l.write.mode("overwrite").parquet(s"$labelsOut/batch=$batchId")
               merges.write.mode("overwrite").parquet(s"$mergesOut/batch=$batchId")
-              graft.media.Media.appendImageDedupStateFromIds(
-                ids.select(col("image_id"), col("dhash")), l, bandsTable, stateDir, buckets,
+              graft.media.Media.appendImageDedupState(ids, l, bandsTable, stateDir, buckets,
                 writeLabels = false)
             } finally l.unpersist()
           }
@@ -255,15 +251,15 @@ object StreamOps {
         val b = batch.localCheckpoint(true)
         try {
           if (b.count() > 0) {
-            // Prepared variant: the dedup's band rows feed the state fold
-            // too, so every doc is tokenized/minhashed exactly ONCE
+            // the dedup's band rows feed the state fold too, so every
+            // doc is tokenized/minhashed exactly ONCE
             val (labels, merges, bands) = graft.text.TextDedupState
-              .incrementalTextDedupPrepared(b, bandsTable)
+              .incrementalTextDedup(b, bandsTable)
             val l = labels.localCheckpoint(true)
             try {
               l.write.mode("overwrite").parquet(s"$labelsOut/batch=$batchId")
               merges.write.mode("overwrite").parquet(s"$mergesOut/batch=$batchId")
-              graft.text.TextDedupState.appendTextDedupStateFromBands(
+              graft.text.TextDedupState.appendTextDedupState(
                 bands, l, bandsTable, stateDir, buckets, writeLabels = false)
             } finally l.unpersist()
           }
@@ -284,8 +280,8 @@ object StreamOps {
     * micro-batch assigns/probes ONLY its own vectors against the
     * batch's cells' partitions; the corpus never re-shuffles. The
     * assignment runs once in the dedup and once in the fold — a
-    * map-side kernel over a batch-sized input, not worth the prepared-
-    * variant plumbing the text path's per-doc hashing justified. */
+    * map-side kernel over a batch-sized input, not worth the band-row
+    * hand-off the text path's per-doc hashing justified. */
   def incrementalSemDedupStream(vecs: DataFrame, stateDir: String, minCos: Double,
                                 labelsOut: String, mergesOut: String,
                                 checkpointDir: String): StreamingQuery =

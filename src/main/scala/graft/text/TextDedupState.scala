@@ -138,17 +138,11 @@ object TextDedupState {
     * text, so boundary semantics equal re-clustering the union for
     * eligible AND ineligible docs. Old labels are sticky; bridges emit
     * merges (see ops.StickyLabels). Returns (labels(doc_id, rep),
-    * merges(rep_a, merged_rep)). */
+    * merges(rep_a, merged_rep), bands) — `bands` are the batch's
+    * checkpointed band rows, which [[appendTextDedupState]] takes, so a
+    * batch that is dedup'd and then folded into the state hashes each
+    * document ONCE. */
   def incrementalTextDedup(newDocs: DataFrame, bandsTable: String):
-      (DataFrame, DataFrame) = {
-    val (labels, merges, _) = incrementalTextDedupPrepared(newDocs, bandsTable)
-    (labels, merges)
-  }
-
-  /** [[incrementalTextDedup]] that also returns the batch's prepared
-    * band rows, so a caller that will fold the batch into the state
-    * (the streaming wrapper) hashes each document ONCE. */
-  def incrementalTextDedupPrepared(newDocs: DataFrame, bandsTable: String):
       (DataFrame, DataFrame, DataFrame) = {
     val spark = newDocs.sparkSession
     val (starEdges, bands) = prepareBatch(newDocs)
@@ -176,24 +170,17 @@ object TextDedupState {
   }
 
   /** Fold a processed batch into the state so the NEXT batch sees it:
-    * append band rows for the batch's distinct-md5 rep docs whose text
-    * is NOT already indexed (presence = exact text_md5 match through
-    * the md5-band bucket join — covers LSH-ineligible docs too, and
-    * the corpus side stays shuffle-free), labeled with the batch's
+    * from the batch's `bands` (as [[incrementalTextDedup]] returns
+    * them), append band rows for the batch's distinct-md5 rep docs
+    * whose text is NOT already indexed (presence = exact text_md5 match
+    * through the md5-band bucket join — covers LSH-ineligible docs too,
+    * and the corpus side stays shuffle-free), labeled with the batch's
     * FINAL reps; plus the labels (skippable via `writeLabels` for
     * callers with their own idempotent label sink). Single-writer per
     * corpus, enforced by ops.StateLease. */
-  def appendTextDedupState(newDocs: DataFrame, newLabels: DataFrame,
+  def appendTextDedupState(bands: DataFrame, newLabels: DataFrame,
                            bandsTable: String, dir: String, buckets: Int,
-                           writeLabels: Boolean = true): Unit =
-    appendTextDedupStateFromBands(prepareBatch(newDocs)._2, newLabels,
-      bandsTable, dir, buckets, writeLabels)
-
-  /** [[appendTextDedupState]] over band rows already prepared by
-    * [[incrementalTextDedupPrepared]] — one hashing pass per batch. */
-  def appendTextDedupStateFromBands(bands: DataFrame, newLabels: DataFrame,
-                                    bandsTable: String, dir: String, buckets: Int,
-                                    writeLabels: Boolean = true): Unit = {
+                           writeLabels: Boolean = true): Unit = {
     val lease = graft.ops.StateLease.acquire(dir)
     try {
       graft.ops.StateLease.checkFenced(lease)

@@ -539,26 +539,15 @@ object TextOps {
     * The DuckDB oracle (q51) replicates hash, cap, star and verify
     * exactly — same portable arithmetic as q50.
     *
-    * Single-scan by default: the corpus text column is read and
-    * window-hashed exactly ONCE — the windowed projection
-    * (doc_id, wh, snip) spools to a localCheckpoint (map-side, nothing
-    * extra shuffles) and funds both the bucket stats and the byte
-    * verify. The spool costs ~(16+n) bytes per window of local storage;
-    * [[duplicateSpansRescan]] trades that storage for a second full
-    * text scan — preferred when docs is a huge raw columnar table where
-    * a second pruned scan is cheaper than spooling ~n bytes/char, i.e.
-    * cheap-to-rescan sources. Whenever `text` is itself DERIVED
-    * (HTML-extracted, OCR'd, decompressed), rescanning re-pays that
-    * derivation and the single-scan spool wins at any size. Both
-    * variants produce identical results (PlanSpec pins equality). */
+    * Single scan: the corpus text column is read and window-hashed
+    * exactly ONCE — the windowed projection (doc_id, wh, snip) spools to
+    * a localCheckpoint (map-side, nothing extra shuffles) and funds both
+    * the bucket stats and the byte verify. The spool costs ~(16+n)
+    * bytes per window of local storage; whenever `text` is itself
+    * DERIVED (HTML-extracted, OCR'd, decompressed), a second scan would
+    * re-pay that derivation. */
   def duplicateSpans(docs: DataFrame, n: Int, cap: Int = 64): DataFrame =
-    duplicateSpansImpl(docs, n, cap, checkpoint = true, singleScan = true)
-
-  /** Two-scan variant: nothing corpus-sized ever materializes; the text
-    * column is scanned twice (window stats, then broadcast-filtered
-    * snippet extraction). See [[duplicateSpans]] for the regime split. */
-  def duplicateSpansRescan(docs: DataFrame, n: Int, cap: Int = 64): DataFrame =
-    duplicateSpansImpl(docs, n, cap, checkpoint = true, singleScan = false)
+    duplicateSpansImpl(docs, n, cap, checkpoint = true)
 
   /** The one-corpus-pass windowed projection: every n-char window's
     * 62-bit rolling hash plus its bytes, from the single-pass codegen
@@ -579,15 +568,13 @@ object TextOps {
     * each feed multiple consumers, and the corpus window pass must run
     * once, not 4x). */
   private[graft] def duplicateSpansImpl(docs: DataFrame, n: Int, cap: Int,
-                                        checkpoint: Boolean,
-                                        singleScan: Boolean = true): DataFrame = {
+                                        checkpoint: Boolean): DataFrame = {
     def ckpt(df: DataFrame): DataFrame = if (checkpoint) df.localCheckpoint(true) else df
-    // Both variants shuffle the SAME volumes: bucket stats move only
-    // distinct (wh, doc_id) pairs (countDistinct's partial-distinct
-    // stage == the explicit w.distinct() of the rescan variant), and
-    // the snippet set dedupes AFTER the broadcast collided-hash filter,
-    // at candidate size. DISTINCT (not a min-collapse) on snippets: a
-    // doc holding two same-hash different-byte windows must keep BOTH —
+    // Bucket stats move only distinct (wh, doc_id) pairs (countDistinct's
+    // partial-distinct stage), and the snippet set dedupes AFTER the
+    // broadcast collided-hash filter, at candidate size. DISTINCT (not
+    // a min-collapse) on snippets: a doc holding two same-hash
+    // different-byte windows must keep BOTH —
     // the collapsed one could be the bytes another doc genuinely shares.
     // bcnt rides the broadcast filter join itself (it is functionally
     // determined by wh, so distinct over (doc_id, wh, snip, bcnt) keeps
@@ -595,33 +582,13 @@ object TextOps {
     // separate `snips.join(bstats)` re-join cost one more checkpoint of
     // the stats table plus a second join/broadcast for a column the
     // first join already had in hand.
-    val c = ckpt(
-      if (singleScan) {
-        val proj = ckpt(duplicateSpansProjection(docs, n))
-        val bs = proj.groupBy("wh")
-          .agg(countDistinct(col("doc_id")).as("bcnt"))
-          .filter(col("bcnt") >= 2)
-        proj.join(broadcast(bs), "wh")
-          .select(col("doc_id"), col("wh"), col("snip"), col("bcnt"))
-          .distinct()
-      } else {
-        val src = fanOut(docs.select(col("doc_id"), col("text")))
-        val w = src.select(col("doc_id"), explode(charNgramHashes(col("text"), n)).as("wh"))
-          .distinct()
-        val bs = w.groupBy("wh")
-          .agg(count(lit(1)).as("bcnt"))
-          .filter(col("bcnt") >= 2)
-        // snippets map-side: text never shuffles past the fan-out — the
-        // broadcast carries only the collided-hash vocabulary (8-byte wh
-        // + count), and the rows leaving the scan are
-        // (doc_id, wh, n-char snip)
-        src.select(col("doc_id"), col("text"),
-            posexplode(charNgramHashes(col("text"), n)).as(Seq("p0", "wh")))
-          .join(broadcast(bs), "wh")
-          .select(col("doc_id"), col("wh"),
-            expr(s"substring(text, p0 + 1, $n)").as("snip"), col("bcnt"))
-          .distinct()
-      })
+    val proj = ckpt(duplicateSpansProjection(docs, n))
+    val bs = proj.groupBy("wh")
+      .agg(countDistinct(col("doc_id")).as("bcnt"))
+      .filter(col("bcnt") >= 2)
+    val c = ckpt(proj.join(broadcast(bs), "wh")
+      .select(col("doc_id"), col("wh"), col("snip"), col("bcnt"))
+      .distinct())
     val small = c.filter(col("bcnt") <= cap)
     val allPairs = small.as("a").join(small.as("b"),
       col("a.wh") === col("b.wh") && col("a.doc_id") < col("b.doc_id"))

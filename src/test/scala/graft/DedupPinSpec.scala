@@ -58,16 +58,17 @@ class DedupPinSpec extends AnyFunSuite {
       "writeImageDedupState labels" -> digest(aLabels),
       "writeImageDedupState labels dir" -> digest(spark.read.parquet(s"$dir/labels")),
       "writeImageDedupState bands" -> digest(spark.table(tbl)))
-    val (bl, bm) = Media.incrementalImageDedup(images(batchB), tbl)
+    val bIds = Media.dhashes(images(batchB))
+    val (bl, bm) = Media.incrementalImageDedup(bIds, tbl)
     val blC = bl.localCheckpoint(true)
     val resolved = Map(
       "incrementalImageDedup labels" -> digest(blC),
       "incrementalImageDedup merges" -> digest(bm))
-    Media.appendImageDedupState(images(batchB), blC, tbl, dir, buckets = 4)
+    Media.appendImageDedupState(bIds, blC, tbl, dir, buckets = 4)
     val appended = Map(
       "appendImageDedupState bands" -> digest(spark.table(tbl)),
       "appendImageDedupState labels dir" -> digest(spark.read.parquet(s"$dir/labels")))
-    val (cl, cm) = Media.incrementalImageDedup(images(batchC), tbl)
+    val (cl, cm) = Media.incrementalImageDedup(Media.dhashes(images(batchC)), tbl)
     written ++ resolved ++ appended ++ Map(
       "incrementalImageDedup after append labels" -> digest(cl),
       "incrementalImageDedup after append merges" -> digest(cm))
@@ -77,18 +78,12 @@ class DedupPinSpec extends AnyFunSuite {
     "imageDupClusters" -> (() => digest(Media.imageDupClusters(corpus))),
     "imageDupClustersPhased._1" -> (() => digest(Media.imageDupClustersPhased(corpus)._1)),
     "imageDupLabelsNid" -> { () =>
-      val ids = Media.dhashes(corpus).withColumn("nid", xxhash64(col("image_id")))
-      digest(Media.imageDupLabelsNid(ids.select(col("nid"), col("dhash"))))
+      digest(Media.imageDupLabelsNid(Media.dhashes(corpus).select(col("nid"), col("dhash"))))
     },
     // the edge list itself: the exact-pregroup stars and the banded
     // pairs between pregroup reps, so a change of the rep choice shows
     // even where the component labels cannot see it
-    "dupEdges" -> { () =>
-      val ids = Media.dhashes(corpus).withColumn("nid", xxhash64(col("image_id")))
-      val m = Media.getClass.getDeclaredMethod("dupEdges", classOf[DataFrame], classOf[Int])
-      m.setAccessible(true)
-      digest(m.invoke(Media, ids, Int.box(2)).asInstanceOf[DataFrame])
-    },
+    "dupEdges" -> (() => digest(Media.dupEdges(Media.dhashes(corpus), 2)._1)),
     "ImageCuration.run" -> { () =>
       val out = java.nio.file.Files.createTempDirectory("deduppincur").toString + "/out"
       val (_, counts) = graft.pipelines.ImageCuration.run(spark, corpus, out, minPixels = 64L)

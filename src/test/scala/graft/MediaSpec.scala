@@ -169,8 +169,10 @@ class MediaSpec extends AnyFunSuite {
       o.copy(image_id = o.image_id + "_re", bytes = Media.reencodePng(img), fmt = "png")
     }
     val df = spark.createDataset(originals ++ dups).toDF()
-    val pairs = Media.imageNearDupPairs(Media.dhashes(df), maxHamming = 2)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val ids = Media.dhashes(df)
+    val names = ids.select("nid", "image_id").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val pairs = Media.dupEdges(ids, maxHamming = 2)._1
+      .collect().map(r => (names(r.getLong(0)), names(r.getLong(1)))).toSet
     Seq(0L, 7L, 21L).foreach { i =>
       val id = originals(i.toInt).image_id
       assert(pairs.contains((id, s"${id}_re")) || pairs.contains((s"${id}_re", id)),
@@ -208,11 +210,15 @@ class MediaSpec extends AnyFunSuite {
       if a._1 < b._1 && java.lang.Long.bitCount(a._2 ^ b._2) <= 2
     } yield (a._1, b._1)).toSet
 
+  /** The nid edge builder's pairs over distinct hashes (no exact
+    * copies, so every edge is a banded pair), mapped back to names. */
   private def foundPairs(hs: Seq[(String, Long)]): Set[(String, String)] = {
     import spark.implicits._
-    Media.imageNearDupPairs(hs.toDF("image_id", "dhash"), maxHamming = 2)
+    val names = hs.map(_._1).zipWithIndex.map { case (n, i) => i.toLong -> n }.toMap
+    Media.dupEdges(hs.zipWithIndex.map { case ((_, h), i) => (i.toLong, h) }.toDF("nid", "dhash"),
+        maxHamming = 2)._1
       .collect().map { r =>
-        val (a, b) = (r.getString(0), r.getString(1))
+        val (a, b) = (names(r.getLong(0)), names(r.getLong(1)))
         if (a < b) (a, b) else (b, a)
       }.toSet
   }
@@ -264,7 +270,7 @@ class MediaSpec extends AnyFunSuite {
       spark.createDataset(aRows).toDF(), dir, "dedup_state_bands", buckets = 4)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val (bl, mg) = Media.incrementalImageDedup(
-      spark.createDataset(bRows).toDF(), "dedup_state_bands")
+      Media.dhashes(spark.createDataset(bRows).toDF()), "dedup_state_bands")
     val bLabels = bl.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val merges = mg.collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
@@ -303,10 +309,11 @@ class MediaSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("dedupappend").toString
     val tbl = "dedup_append_bands"
     Media.writeImageDedupState(spark.createDataset(aRows).toDF(), dir, tbl, buckets = 4)
-    val (bl, _) = Media.incrementalImageDedup(spark.createDataset(bRows).toDF(), tbl)
+    val bIds = Media.dhashes(spark.createDataset(bRows).toDF())
+    val (bl, _) = Media.incrementalImageDedup(bIds, tbl)
     val blM = bl.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    Media.appendImageDedupState(spark.createDataset(bRows).toDF(), bl, tbl, dir, buckets = 4)
-    val (cl, _) = Media.incrementalImageDedup(spark.createDataset(cRows).toDF(), tbl)
+    Media.appendImageDedupState(bIds, bl, tbl, dir, buckets = 4)
+    val (cl, _) = Media.incrementalImageDedup(Media.dhashes(spark.createDataset(cRows).toDF()), tbl)
     val clM = cl.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val b45 = originals(45).image_id
     assert(clM(b45 + "_rc") == blM(b45),
@@ -606,19 +613,20 @@ class MediaSpec extends AnyFunSuite {
     val tbl = "dedup_lease_bands"
     Media.writeImageDedupState(spark.createDataset(originals.take(10)).toDF(), dir, tbl, buckets = 4)
     val bRows = originals.drop(10)
-    val (bl, _) = Media.incrementalImageDedup(spark.createDataset(bRows).toDF(), tbl)
+    val bIds = Media.dhashes(spark.createDataset(bRows).toDF())
+    val (bl, _) = Media.incrementalImageDedup(bIds, tbl)
     val blC = bl.localCheckpoint(true)
     // a FRESH lease held by "another writer" must reject the append
     val lease = java.nio.file.Paths.get(dir, ".writer_lease")
     java.nio.file.Files.createFile(lease)
     val ex = intercept[IllegalStateException] {
-      Media.appendImageDedupState(spark.createDataset(bRows).toDF(), blC, tbl, dir, buckets = 4)
+      Media.appendImageDedupState(bIds, blC, tbl, dir, buckets = 4)
     }
     assert(ex.getMessage.contains("another writer"), ex.getMessage)
     // a STALE lease (crashed writer, mtime beyond the lease window) is stolen
     java.nio.file.Files.setLastModifiedTime(lease,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600 * 1000))
-    Media.appendImageDedupState(spark.createDataset(bRows).toDF(), blC, tbl, dir, buckets = 4)
+    Media.appendImageDedupState(bIds, blC, tbl, dir, buckets = 4)
     assert(!java.nio.file.Files.exists(lease), "lease not released after append")
     // the append landed (a B hash has its 6 band rows)
     val h = Media.dhash64(Media.decode(bRows.head.image_id, bRows.head.bytes,

@@ -61,24 +61,24 @@ class CrashRecoverySpec extends AnyFunSuite {
     // reference: the never-crashed run
     val refTbl = "crash_text_ref"
     TextDedupState.writeTextDedupState(textDf(a), s"$base/ref", refTbl, buckets = 4)
-    val (refBl, _) = TextDedupState.incrementalTextDedup(textDf(b), refTbl)
-    TextDedupState.appendTextDedupState(textDf(b), refBl, refTbl, s"$base/ref", buckets = 4)
+    val (refBl, _, refBands) = TextDedupState.incrementalTextDedup(textDf(b), refTbl)
+    TextDedupState.appendTextDedupState(refBands, refBl, refTbl, s"$base/ref", buckets = 4)
 
     // crashing run: same batches
     val tbl = "crash_text_crashed"
     TextDedupState.writeTextDedupState(textDf(a), s"$base/st", tbl, buckets = 4)
-    val (bl, _) = TextDedupState.incrementalTextDedup(textDf(b), tbl)
+    val (bl, _, bands) = TextDedupState.incrementalTextDedup(textDf(b), tbl)
     // CRASH: bands appended, labels never written, stale lease left over
-    TextDedupState.appendTextDedupState(textDf(b), bl, tbl, s"$base/st", buckets = 4,
+    TextDedupState.appendTextDedupState(bands, bl, tbl, s"$base/st", buckets = 4,
       writeLabels = false)
     val lease = plantStaleLease(s"$base/st")
 
     // RECOVERY: driver retries the whole batch; acquire() must steal
-    val (blR, _) = TextDedupState.incrementalTextDedup(textDf(b), tbl)
+    val (blR, _, bandsR) = TextDedupState.incrementalTextDedup(textDf(b), tbl)
     assert(blR.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
       bl.collect().map(r => (r.getLong(0), r.getLong(1))).toMap,
       "replayed incremental resolve diverged from the pre-crash resolve")
-    TextDedupState.appendTextDedupState(textDf(b), blR, tbl, s"$base/st", buckets = 4)
+    TextDedupState.appendTextDedupState(bandsR, blR, tbl, s"$base/st", buckets = 4)
     assert(!java.nio.file.Files.exists(lease), "recovery writer leaked its lease")
 
     // recovered state == never-crashed state (bands as a multiset, labels as a set)
@@ -94,8 +94,8 @@ class CrashRecoverySpec extends AnyFunSuite {
 
     // and the NEXT batch behaves identically on both states
     val c = Seq((300L, textDoc(22, 1))) // near-dup of a batch-B doc
-    val (clRec, _) = TextDedupState.incrementalTextDedup(textDf(c), tbl)
-    val (clRef, _) = TextDedupState.incrementalTextDedup(textDf(c), refTbl)
+    val (clRec, _, _) = TextDedupState.incrementalTextDedup(textDf(c), tbl)
+    val (clRef, _, _) = TextDedupState.incrementalTextDedup(textDf(c), refTbl)
     assert(clRec.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       clRef.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
   }
@@ -114,26 +114,26 @@ class CrashRecoverySpec extends AnyFunSuite {
     val bRows = originals.drop(20) ++ Seq(re(5, "_rb")) // boundary dup of an A image
     val base = java.nio.file.Files.createTempDirectory("crashimage").toString
 
+    val bIds = Media.dhashes(spark.createDataset(bRows).toDF())
     val refTbl = "crash_img_ref"
     Media.writeImageDedupState(spark.createDataset(aRows).toDF(), s"$base/ref", refTbl, buckets = 4)
-    val (refBl, _) = Media.incrementalImageDedup(spark.createDataset(bRows).toDF(), refTbl)
-    Media.appendImageDedupState(spark.createDataset(bRows).toDF(), refBl, refTbl, s"$base/ref", buckets = 4)
+    val (refBl, _) = Media.incrementalImageDedup(bIds, refTbl)
+    Media.appendImageDedupState(bIds, refBl, refTbl, s"$base/ref", buckets = 4)
 
     val tbl = "crash_img_crashed"
     Media.writeImageDedupState(spark.createDataset(aRows).toDF(), s"$base/st", tbl, buckets = 4)
-    val (bl, _) = Media.incrementalImageDedup(spark.createDataset(bRows).toDF(), tbl)
+    val (bl, _) = Media.incrementalImageDedup(bIds, tbl)
     // CRASH: bands appended, labels never written, stale lease left over
-    Media.appendImageDedupStateFromIds(
-      Media.dhashes(spark.createDataset(bRows).toDF()), bl, tbl, s"$base/st", buckets = 4,
-      writeLabels = false)
+    Media.appendImageDedupState(bIds, bl, tbl, s"$base/st", buckets = 4, writeLabels = false)
     val lease = plantStaleLease(s"$base/st")
 
-    // RECOVERY: replay the whole batch
-    val (blR, _) = Media.incrementalImageDedup(spark.createDataset(bRows).toDF(), tbl)
+    // RECOVERY: replay the whole batch (decoded afresh, as a replay is)
+    val bIdsR = Media.dhashes(spark.createDataset(bRows).toDF())
+    val (blR, _) = Media.incrementalImageDedup(bIdsR, tbl)
     assert(blR.collect().map(r => (r.getString(0), r.getString(1))).toMap ==
       bl.collect().map(r => (r.getString(0), r.getString(1))).toMap,
       "replayed incremental resolve diverged from the pre-crash resolve")
-    Media.appendImageDedupState(spark.createDataset(bRows).toDF(), blR, tbl, s"$base/st", buckets = 4)
+    Media.appendImageDedupState(bIdsR, blR, tbl, s"$base/st", buckets = 4)
     assert(!java.nio.file.Files.exists(lease), "recovery writer leaked its lease")
 
     def bandRows(t: String): Seq[(Long, Long, Long, String)] =

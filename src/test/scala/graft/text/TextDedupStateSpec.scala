@@ -49,7 +49,7 @@ class TextDedupStateSpec extends AnyFunSuite {
     // A-internal: exact + near dups of family 3 co-cluster
     assert(aLabels(100L) == aLabels(3L) && aLabels(101L) == aLabels(3L))
 
-    val (bl, merges) = TextDedupState.incrementalTextDedup(df(b), tbl)
+    val (bl, merges, _) = TextDedupState.incrementalTextDedup(df(b), tbl)
     val bLabels = labelsMap(bl)
     // sticky: the boundary near-dup and exact copy adopt A's labels
     assert(bLabels(200L) == aLabels(5L), s"boundary near-dup got ${bLabels(200L)}")
@@ -76,14 +76,14 @@ class TextDedupStateSpec extends AnyFunSuite {
     val tbl = "text_dedup_bands_inelig"
     val a = Seq((0L, "X 9!"), (1L, doc(1, 0)))
     val aLabels = labelsMap(TextDedupState.writeTextDedupState(df(a), s"$base/state", tbl, buckets = 4))
-    val (bl, _) = TextDedupState.incrementalTextDedup(
+    val (bl, _, _) = TextDedupState.incrementalTextDedup(
       df(Seq((10L, "X 9!"), (11L, doc(9, 0)))), tbl)
     val bLabels = labelsMap(bl)
     assert(bLabels(10L) == aLabels(0L),
       s"ineligible exact copy got ${bLabels(10L)}, expected ${aLabels(0L)}")
     assert(bLabels(11L) == 11L, "unrelated doc must stay a singleton")
     // and an ineligible NON-copy never false-matches through the md5 band
-    val (cl, _) = TextDedupState.incrementalTextDedup(df(Seq((20L, "Y 7?"))), tbl)
+    val (cl, _, _) = TextDedupState.incrementalTextDedup(df(Seq((20L, "Y 7?"))), tbl)
     assert(labelsMap(cl)(20L) == 20L)
   }
 
@@ -94,10 +94,10 @@ class TextDedupStateSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("textdedupchain").toString
     val tbl = "text_dedup_bands_chain"
     TextDedupState.writeTextDedupState(df(a), s"$base/state", tbl, buckets = 4)
-    val (bl, _) = TextDedupState.incrementalTextDedup(df(b), tbl)
+    val (bl, _, bBands) = TextDedupState.incrementalTextDedup(df(b), tbl)
     val blM = labelsMap(bl)
-    TextDedupState.appendTextDedupState(df(b), bl, tbl, s"$base/state", buckets = 4)
-    val (cl, _) = TextDedupState.incrementalTextDedup(df(c), tbl)
+    TextDedupState.appendTextDedupState(bBands, bl, tbl, s"$base/state", buckets = 4)
+    val (cl, _, _) = TextDedupState.incrementalTextDedup(df(c), tbl)
     assert(labelsMap(cl)(400L) == blM(21L),
       "C's near-dup of a B doc did not resolve through B's folded state")
     // no-bloat: doc 2's text was indexed by A; B's exact copy (id 300)

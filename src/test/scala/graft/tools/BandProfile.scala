@@ -21,19 +21,20 @@ object BandProfile {
     val images = spark.read.parquet(path)
     // decode once (untimed warmup of the same kernels), then timed
     val ids = graft.media.Media.dhashes(images)
-      .withColumn("nid", xxhash64(col("image_id"))).localCheckpoint(true)
     println(s"[profile] input rows: ${ids.count()}")
     (0 until 2).foreach { rep =>
       println(s"[profile] --- rep $rep ---")
       val hashes = timed("pregroup (groupBy dhash + join + checkpoint)") {
-        val groups = ids.groupBy(col("dhash")).agg(min(col("nid")).as("grep"))
-        val withRep = ids.join(groups, "dhash").localCheckpoint(true)
+        // the nid-only pregroup: no image_id on the shuffle or checkpoint
+        val slim = ids.select(col("nid"), col("dhash"))
+        val groups = slim.groupBy(col("dhash")).agg(min(col("nid")).as("grep"))
+        val withRep = slim.join(groups, "dhash").localCheckpoint(true)
         val reps = withRep.filter(col("nid") === col("grep"))
-          .select(col("nid").as("image_id"), col("dhash")).localCheckpoint(true)
+          .select(col("nid"), col("dhash")).localCheckpoint(true)
         println(s"  distinct hashes: ${reps.count()}")
         reps
       }
-      val banded = hashes.select(col("image_id").as("doc_id"),
+      val banded = hashes.select(col("nid").as("doc_id"),
         lit(0L).as("key"), col("dhash").as("resid"))
       timed("level-1 explode + bucket stats (groupBy key)") {
         // the same six-subband shape bandPairs builds at level 1
@@ -49,8 +50,8 @@ object BandProfile {
           .filter(col("bcnt") >= 2).count()
         println(s"  collided buckets: $collided")
       }
-      timed("full nearDup pair generation + Hamming verify") {
-        println(s"  pairs: ${graft.media.Media.imageNearDupPairs(hashes, 2).count()}")
+      timed("full edge build (pregroup + banded pairs + Hamming verify)") {
+        println(s"  edges: ${graft.media.Media.dupEdges(ids, 2)._1.count()}")
       }
     }
     spark.stop()

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 /** One-shot throughput probe for the perceptual dedup pipeline at a
   * given image-table path and core count:
   *   sbt "Test/runMain graft.tools.DedupDrive <imgPath> <cpus>"
-  * Prints images, seconds, images/sec, clusters. */
+  * Prints images, seconds (total and the decode/band phases),
+  * images/sec and the count of non-rep images. */
 object DedupDrive {
   def main(args: Array[String]): Unit = {
     val path = args(0)
@@ -19,10 +20,12 @@ object DedupDrive {
     val imgs = spark.read.parquet(path)
     val n = imgs.count()
     val t0 = System.nanoTime()
-    val dup = graft.media.Media.imageDupClusters(imgs, maxHamming = 2)
-      .filter(col("image_id") =!= col("rep")).count()
+    val (labels, decodeSec, bandSec) =
+      graft.media.Media.imageDupClustersPhased(imgs, maxHamming = 2)
+    val dup = labels.filter(col("image_id") =!= col("rep")).count()
     val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[dedup] images=$n sec=$sec%.2f images_per_sec=${n / sec}%.0f non_rep=$dup")
+    println(f"[dedup] images=$n sec=$sec%.2f decode_s=$decodeSec%.2f band_s=$bandSec%.2f " +
+      f"images_per_sec=${n / sec}%.0f non_rep=$dup")
     spark.stop()
   }
 }

@@ -2,8 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-/** Test-scope: single-scan vs rescan duplicate-span timings + phase
-  * split at a given sf dir. */
+/** Test-scope: duplicate-span timings, whole operator vs the windowed
+  * projection alone, at a given sf dir. */
 object SpanProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
@@ -19,8 +19,7 @@ object SpanProfile {
     // warm
     graft.text.TextOps.duplicateSpans(docs, 30, 64).count()
     (0 until 2).foreach { _ =>
-      time("singleScan")(graft.text.TextOps.duplicateSpans(docs, 30, 64).count())
-      time("rescan    ")(graft.text.TextOps.duplicateSpansRescan(docs, 30, 64).count())
+      time("spans     ")(graft.text.TextOps.duplicateSpans(docs, 30, 64).count())
       time("proj only ")(graft.text.TextOps.duplicateSpansProjection(docs, 30).localCheckpoint(true).count())
     }
     spark.stop()
